@@ -36,6 +36,18 @@ object Graft {
     spark
   }
 
+  /** [[session]] for the command-line drivers (Bench, Verify, PlanDump):
+    * `local[SPARK_GRAFT_CPUS]` (default: every core) with shuffle
+    * partitions set to the same count.
+    */
+  def driverSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = session(s"local[$cpus]")
+    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark
+  }
+
   /** Parquet scan for a harness table (SURVEY.md §2.1 S7). Filters and
     * projections written downstream reach the scan via Catalyst pushdown.
     */

@@ -9,7 +9,8 @@ package graft
   * Optional env SPARK_GRAFT_MAXPART: overrides
   * spark.sql.files.maxPartitionBytes for the run (perturbs scan split
   * counts without touching the data — the honest stats-perturbation
-  * probe for classify).
+  * probe for classify). SPARK_GRAFT_CPUS sizes the session as in
+  * Bench and Verify (Graft.driverSession).
   */
 object PlanDump {
 
@@ -24,22 +25,9 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(outDir)
     val only = args.lift(2).map(_.split(",").toSeq)
-    val spark = {
-      val b = org.apache.spark.sql.SparkSession.builder()
-        .master(s"local[${Runtime.getRuntime.availableProcessors}]")
-        .config("spark.sql.shuffle.partitions",
-          Runtime.getRuntime.availableProcessors.toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-        .config("spark.ui.enabled", "false")
-      sys.env.get("SPARK_GRAFT_MAXPART").foreach(v =>
-        b.config("spark.sql.files.maxPartitionBytes", v))
-      b.getOrCreate()
-    }
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.driverSession()
+    sys.env.get("SPARK_GRAFT_MAXPART").foreach(v =>
+      spark.conf.set("spark.sql.files.maxPartitionBytes", v))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
       .foreach { case (name, fn) =>

@@ -1,6 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -153,10 +154,16 @@ object GraftFunctions {
       org.apache.spark.sql.catalyst.expressions
         .BloomFilterMightContain(exprs(0), exprs(1))))
 
+  /** Idempotent: names the session's registry already holds (an earlier
+    * call, or [[graft.GraftExtensions]]) are skipped, so repeated calls
+    * neither re-register nor log Spark's "replaced a previously
+    * registered function" warning.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
 }

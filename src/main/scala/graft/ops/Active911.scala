@@ -140,13 +140,17 @@ object Active911 {
 
   /** Split one CSV text blob into records on newlines that are OUTSIDE
     * quoted fields (the `responses` column embeds newlines — reference
-    * `task.ts:195-196`; SURVEY.md §7.5#3). Even-quote lookahead handles
-    * standard `""` escaping. Scales: the blob is parsed where it lives;
-    * for file-based ingest use `spark.read.option("multiLine",true).csv`.
+    * `task.ts:195-196`; SURVEY.md §7.5#3). Each record is MATCHED as a
+    * run of unquoted non-newline text and quoted fields (standard `""`
+    * escaping is two adjacent quoted runs), so one linear pass covers
+    * the blob; possessive quantifiers keep java.util.regex iterating
+    * instead of recursing per quote pair. Blank records produce no
+    * match and are skipped. For file-based ingest use
+    * `spark.read.option("multiLine",true).csv`.
     */
   def csvRecords(text: Column): Column =
-    split(regexp_replace(text, "\r\n", "\n"),
-      "\n(?=(?:[^\"]*\"[^\"]*\")*[^\"]*$)")
+    regexp_extract_all(regexp_replace(text, "\r\n", "\n"),
+      lit("(?:[^\"\n]++|\"[^\"]*+\")++"), lit(0))
 
   /** Decode wire envelopes into alert rows (reference `task.ts:155-170`):
     * JSONP unwrap → JSON parse → base64 decode → CSV parse against

@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -49,6 +51,25 @@ object AdvancedStreaming {
     s.read.parquet(dir.toString).schema
   }
 
+  /** The click→purchase interval join of the stream-stream join rigs
+    * (q65 inner, q148 left outer, q171 left semi, q196 full outer, q207
+    * right outer): each click joined to the same user's purchases
+    * within the following 12 hours. The event-time range predicate plus
+    * the two 1-hour watermarks is what bounds the join state.
+    */
+  private def intervalJoin(clicks: DataFrame, purchases: DataFrame,
+      joinType: String): DataFrame =
+    clicks.select(col("event_id").as("click_id"), col("user_id"),
+        col("ts").as("click_ts"))
+      .withWatermark("click_ts", "1 hour")
+      .join(purchases.select(col("event_id").as("purchase_id"),
+          col("user_id").as("p_user"), col("ts").as("p_ts"))
+        .withWatermark("p_ts", "1 hour"),
+        col("user_id") === col("p_user") &&
+          col("p_ts") >= col("click_ts") &&
+          col("p_ts") <= col("click_ts") + expr("interval 12 hours"),
+        joinType)
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ENGINE-MANAGED session windows (session_window, Spark 3.2+) —
@@ -64,12 +85,8 @@ object AdvancedStreaming {
     // last+gap starts a NEW session — so the oracle breaks on
     // `ms - prev >= gap` where the q21/q170 hand-rolled forms break on
     // `>` (documented API semantics, not internals).
-    "q202_session_window" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_sw_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val stage = java.nio.file.Files.createTempDirectory("graft_sw_")
-      try {
+    "q202_session_window" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
         val ev0 = events(s, d)
         ev0.select(col("user_id"), col("ts"))
           .filter(col("user_id") <= 20)
@@ -77,24 +94,17 @@ object AdvancedStreaming {
             to_timestamp(lit("2030-01-01 00:00:00")).as("ts")))
           .coalesce(1).write.mode("overwrite").parquet(stage.toString)
         val schema = s.read.parquet(stage.toString).schema
-        val q = s.readStream.schema(schema).parquet(stage.toString)
+        s.readStream.schema(schema).parquet(stage.toString)
           .withWatermark("ts", "1 hour")
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n_events"))
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .select(col("user_id"),
+      } { sink =>
+        sink.select(col("user_id"),
             unix_micros(col("session_window.start")).as("start_us"),
             unix_micros(col("session_window.end")).as("end_us"),
             col("n_events"))
           .orderBy(col("user_id"), col("start_us"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // Stream-STATIC broadcast join (the reference's agency-config shape
     // at cluster scale: a small dimension joined into every micro-batch
@@ -102,79 +112,40 @@ object AdvancedStreaming {
     // shuffle for the join, no watermark needed on the static side;
     // unmatched stream rows survive via left join + coalesce. Oracle =
     // the same join in batch SQL.
-    "q82_stream_static_join" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_ssj_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val schema = table(s, d, "events").schema
-      val stage = java.nio.file.Files.createTempDirectory("graft_ssj_")
-      try {
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          stage.resolve("events.parquet"))
+    "q82_stream_static_join" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "complete") { (s, stage) =>
         import s.implicits._
         val dim = Seq(
           ("click", "engagement"), ("view", "engagement"),
           ("purchase", "revenue"), ("signup", "acquisition"))
           .toDF("event_type", "category")
-        val stream = s.readStream.schema(schema).parquet(stage.toString)
+        s.readStream.schema(StreamRig.stageEvents(s, d, stage))
+          .parquet(stage.toString)
           .join(broadcast(dim), Seq("event_type"), "left")
           .withColumn("category", coalesce(col("category"), lit("(other)")))
           .groupBy(col("category"))
           .agg(count(lit(1)).as("n"),
             sum(round(col("value") * 100, 0).cast("long")).as("cents"))
-        val q = stream.writeStream.outputMode("complete")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name).orderBy(col("category"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      } { sink => sink.orderBy(col("category")) }),
 
     // Tumbling-window aggregation executed through Structured Streaming
     // (AvailableNow over the parquet dir, memory sink), oracle-checked
     // against the equivalent batch SQL — proves the streaming engine
     // computes the same answer the SQL semantics demand (SURVEY.md §2.10).
-    "q52_stream_window_agg" -> ((s0, d) => {
-      // cloned session: the state-store count is fixed at query start
-      // from shuffle.partitions — size it to the state's cardinality (a
-      // few hundred window×type groups), not the relational default,
-      // WITHOUT mutating the shared session's conf (queries may run
-      // concurrently on one session)
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_agg_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val schema = table(s, d, "events").schema
-      // file-stream sources watch a directory — stage the single parquet
-      // file into one (in production this IS a directory of arriving files)
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_")
-      try {
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          stage.resolve("events.parquet"))
-        val stream = graft.Graft.normalizeTs(
-            s.readStream.schema(schema).parquet(stage.toString))
+    "q52_stream_window_agg" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "complete") { (s, stage) =>
+        graft.Graft.normalizeTs(
+            s.readStream.schema(StreamRig.stageEvents(s, d, stage))
+              .parquet(stage.toString))
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(round(col("value") * 100, 0).cast("long")).as("cents"))
-        val q = stream.writeStream.outputMode("complete")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        // resolve the result BEFORE unregistering the memory table (the
-        // analyzed plan keeps the sink's rows alive; the catalog entry
-        // and staging files are no longer needed)
-        val out = s.table(name)
-          .select(unix_micros(col("window.start")).as("win_start_us"),
+      } { sink =>
+        sink.select(unix_micros(col("window.start")).as("win_start_us"),
             col("event_type"), col("n"), col("cents"))
           .orderBy(col("win_start_us"), col("event_type"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // SLIDING-window streaming aggregate (q52 is the tumbling form):
     // window(ts, 2h, 30min) lands every event in FOUR overlapping
@@ -187,35 +158,21 @@ object AdvancedStreaming {
     // eviction; watermark-driven state eviction is q52/q147's
     // append-mode territory. Oracle replays the expansion relationally:
     // each event joins its four aligned slide starts.
-    "q190_stream_sliding_window" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_slide_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val schema = table(s, d, "events").schema
-      val stage = java.nio.file.Files.createTempDirectory("graft_slide_")
-      try {
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          stage.resolve("events.parquet"))
-        val stream = graft.Graft.normalizeTs(
-            s.readStream.schema(schema).parquet(stage.toString))
+    "q190_stream_sliding_window" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "complete") { (s, stage) =>
+        graft.Graft.normalizeTs(
+            s.readStream.schema(StreamRig.stageEvents(s, d, stage))
+              .parquet(stage.toString))
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "2 hours", "30 minutes"),
             col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(round(col("value") * 100, 0).cast("long")).as("cents"))
-        val q = stream.writeStream.outputMode("complete")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .select(unix_micros(col("window.start")).as("win_start_us"),
+      } { sink =>
+        sink.select(unix_micros(col("window.start")).as("win_start_us"),
             col("event_type"), col("n"), col("cents"))
           .orderBy(col("win_start_us"), col("event_type"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // Per-key running totals on the Spark 4 arbitrary-state API
     // (streaming.RunningTotals: transformWithState + StatefulProcessor,
@@ -224,37 +181,23 @@ object AdvancedStreaming {
     // key (exact integer cents), so the final state per key is the
     // groupBy max over the sink — which must equal the plain batch
     // aggregate, and that equality IS the oracle.
-    "q120_stream_running_totals" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val name = "stream_tot_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val schema = table(s, d, "events").schema
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_")
-      try {
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          stage.resolve("events.parquet"))
+    "q120_stream_running_totals" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "update") { (s, stage) =>
+        s.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         import s.implicits._
-        val in = s.readStream.schema(schema).parquet(stage.toString)
+        val in = s.readStream.schema(StreamRig.stageEvents(s, d, stage))
+          .parquet(stage.toString)
           .select(col("user_id"),
             round(col("value") * 100, 0).cast("long").as("cents"))
           .as[graft.streaming.RunningTotals.EventIn]
-        val q = graft.streaming.RunningTotals.totals(s, in)
-          .toDF().writeStream.outputMode("update")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .groupBy(col("user_id"))
+        graft.streaming.RunningTotals.totals(s, in).toDF()
+      } { sink =>
+        sink.groupBy(col("user_id"))
           .agg(max(col("n_events")).as("n_events"),
             max(col("total_cents")).as("total_cents"))
           .orderBy(col("user_id"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // Event-time TIMERS on transformWithState (streaming/TimedSessions):
     // sessions close on gap OR on the registered timer when the
@@ -269,14 +212,10 @@ object AdvancedStreaming {
     // sentinel's own session horizon (2030+30min) sits past the
     // terminal watermark, so its open session must stay absent.
     // Users capped at 20 to bound the dump (1.4k sessions at sf0.01).
-    "q170_stream_timer_sessions" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val name = "stream_tmr_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_")
-      try {
+    "q170_stream_timer_sessions" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
+        s.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         val ev0 = events(s, d)
         ev0.select(col("user_id"), col("ts"))
           .unionByName(ev0.limit(1).select(lit(-21L).as("user_id"),
@@ -288,17 +227,8 @@ object AdvancedStreaming {
           .filter(col("user_id") <= 20)
           .select(col("user_id"), col("ts"))
           .as[graft.streaming.TimedSessions.Event]
-        val q = graft.streaming.TimedSessions.sessions(s, in)
-          .toDF().writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .orderBy(col("user_id"), col("start_ms"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+        graft.streaming.TimedSessions.sessions(s, in).toDF()
+      } { sink => sink.orderBy(col("user_id"), col("start_ms")) }),
 
     // MapState counterpart of q120 (streaming/TypeCounts): per-user map
     // of event_type → (n, cents) — point reads/writes touch only the
@@ -306,37 +236,23 @@ object AdvancedStreaming {
     // Same monotone-integer-cents discipline: final (user, type) state
     // is the max over Update-mode emissions, pinned to the plain batch
     // aggregate by the oracle.
-    "q168_stream_map_state" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val name = "stream_map_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val schema = table(s, d, "events").schema
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_")
-      try {
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          stage.resolve("events.parquet"))
+    "q168_stream_map_state" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "update") { (s, stage) =>
+        s.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         import s.implicits._
-        val in = s.readStream.schema(schema).parquet(stage.toString)
+        val in = s.readStream.schema(StreamRig.stageEvents(s, d, stage))
+          .parquet(stage.toString)
           .select(col("user_id"), col("event_type"),
             round(col("value") * 100, 0).cast("long").as("cents"))
           .as[graft.streaming.TypeCounts.EventIn]
-        val q = graft.streaming.TypeCounts.counts(s, in)
-          .toDF().writeStream.outputMode("update")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .groupBy(col("user_id"), col("event_type"))
+        graft.streaming.TypeCounts.counts(s, in).toDF()
+      } { sink =>
+        sink.groupBy(col("user_id"), col("event_type"))
           .agg(max(col("n_events")).as("n_events"),
             max(col("total_cents")).as("total_cents"))
           .orderBy(col("user_id"), col("event_type"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // Per-key bounded recent-event history on transformWithState's
     // ListState surface (streaming.RecentEvents; q120 covers
@@ -348,38 +264,24 @@ object AdvancedStreaming {
     // oracle replay it with a window. Emissions are versioned by a
     // monotone seen-counter (second state handle); max_by collapses
     // multi-batch updates to the final one.
-    "q132_stream_recent_k" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val name = "stream_rec_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val schema = table(s, d, "events").schema
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_")
-      try {
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          stage.resolve("events.parquet"))
+    "q132_stream_recent_k" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "update") { (s, stage) =>
+        s.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         import s.implicits._
         val in = graft.Graft.normalizeTs(
-            s.readStream.schema(schema).parquet(stage.toString))
+            s.readStream.schema(StreamRig.stageEvents(s, d, stage))
+              .parquet(stage.toString))
           .select(col("user_id"), unix_micros(col("ts")).as("us"),
             col("event_id"), col("event_type"))
           .as[graft.streaming.RecentEvents.EventIn]
-        val q = graft.streaming.RecentEvents.recent(s, in, k = 3)
-          .toDF().writeStream.outputMode("update")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .groupBy(col("user_id"))
+        graft.streaming.RecentEvents.recent(s, in, k = 3).toDF()
+      } { sink =>
+        sink.groupBy(col("user_id"))
           .agg(max(col("n_total")).as("n_total"),
             max_by(col("recent"), col("n_total")).as("recent"))
           .orderBy(col("user_id"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // APPEND-mode windowed aggregation — the production streaming mode
     // (q52's complete mode rebuilds the whole result every batch; at
@@ -399,62 +301,31 @@ object AdvancedStreaming {
     // construction, margin 1h ≫ any rounding) must NEVER emit — if a
     // regression emitted open windows, its "__wm_flush" row appears
     // and flips the oracle red.
-    "q147_stream_append_window" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_app_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val ev = graft.Graft.normalizeTs(table(s, d, "events"))
-      val t0 = to_timestamp(lit("2024-01-16 00:00:00"))
-      val stage = java.nio.file.Files.createTempDirectory("graft_append_")
-      val watch = stage.resolve("watch")
-      java.nio.file.Files.createDirectories(watch)
-      try {
-        def stageFile(df: DataFrame, n: String, mt: Long): Unit = {
-          val dir = stage.resolve(n + "_dir")
-          df.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-          // Using.resource: Files.list holds a directory handle until closed
-          val src = scala.util.Using.resource(java.nio.file.Files.list(dir)) { st =>
-            val part = st.iterator()
-            var found: java.nio.file.Path = null
-            while (part.hasNext) {
-              val p = part.next()
-              if (p.toString.endsWith(".parquet")) found = p
-            }
-            found
-          }
-          val dst = watch.resolve(n + ".parquet")
-          java.nio.file.Files.copy(src, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mt))
-        }
-        stageFile(ev.filter(col("ts") < t0), "01", 1000000000000L)
-        stageFile(ev.filter(col("ts") >= t0), "02", 1000000100000L)
+    "q147_stream_append_window" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
+        val ev = graft.Graft.normalizeTs(table(s, d, "events"))
+        val t0 = to_timestamp(lit("2024-01-16 00:00:00"))
+        val watch = Files.createDirectories(stage.resolve("watch"))
+        StreamRig.stageWatchFile(ev.filter(col("ts") < t0), watch, "01",
+          1000000000000L)
+        StreamRig.stageWatchFile(ev.filter(col("ts") >= t0), watch, "02",
+          1000000100000L)
         // sentinel flush batch: one 2030 event pushes the terminal
         // watermark past every real window end (see header comment)
-        stageFile(ev.limit(1).select(lit(-77L).as("event_id"),
-            to_timestamp(lit("2030-01-01 00:00:00")).as("ts"),
-            lit(-77L).as("user_id"), lit("__wm_flush").as("event_type"),
-            lit(0.0).as("value"), lit("{}").as("props")),
-          "03", 1000000200000L)
+        StreamRig.stageWatchFile(StreamRig.wmSentinel(s, -77L, "__wm_flush"),
+          watch, "03", 1000000200000L)
         val schema = s.read.parquet(watch.toString).schema
-        val q = s.readStream.schema(schema)
+        s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(watch.toString)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(round(col("value") * 100, 0).cast("long")).as("cents"))
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .select(unix_micros(col("window.start")).as("win_start_us"),
+      } { sink =>
+        sink.select(unix_micros(col("window.start")).as("win_start_us"),
             col("event_type"), col("n"), col("cents"))
           .orderBy(col("win_start_us"), col("event_type"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // Streaming exact dedup via dropDuplicatesWithinWatermark — the
     // engine-managed answer to at-least-once redelivery (q53's custom
@@ -468,57 +339,31 @@ object AdvancedStreaming {
     // (event_id is unique there); a doubled first half flips it red.
     // State at scale: O(keys inside the watermark horizon), the
     // production knob being the delay, not the corpus.
-    "q157_stream_dedup_watermark" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_ddw_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val ev = graft.Graft.normalizeTs(table(s, d, "events"))
-      val t0 = to_timestamp(lit("2024-01-16 00:00:00"))
-      val stage = java.nio.file.Files.createTempDirectory("graft_ddw_")
-      val watch = stage.resolve("watch")
-      java.nio.file.Files.createDirectories(watch)
-      try {
-        def stageFile(df: DataFrame, n: String, mt: Long): Unit = {
-          val dir = stage.resolve(n + "_dir")
-          df.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-          val src = scala.util.Using.resource(java.nio.file.Files.list(dir)) { st =>
-            val part = st.iterator()
-            var found: java.nio.file.Path = null
-            while (part.hasNext) {
-              val p = part.next()
-              if (p.toString.endsWith(".parquet")) found = p
-            }
-            found
-          }
-          val dst = watch.resolve(n + ".parquet")
-          java.nio.file.Files.copy(src, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mt))
-        }
-        stageFile(ev.filter(col("ts") < t0), "01", 1000000000000L)
-        stageFile(ev.filter(col("ts") >= t0)
-          .unionByName(ev.filter(col("ts") < t0)), "02", 1000000100000L)
+    "q157_stream_dedup_watermark" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
+        val ev = graft.Graft.normalizeTs(table(s, d, "events"))
+        val t0 = to_timestamp(lit("2024-01-16 00:00:00"))
+        val watch = Files.createDirectories(stage.resolve("watch"))
+        StreamRig.stageWatchFile(ev.filter(col("ts") < t0), watch, "01",
+          1000000000000L)
+        StreamRig.stageWatchFile(ev.filter(col("ts") >= t0)
+          .unionByName(ev.filter(col("ts") < t0)), watch, "02",
+          1000000100000L)
         val schema = s.read.parquet(watch.toString).schema
-        val q = s.readStream.schema(schema)
+        s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(watch.toString)
           .withWatermark("ts", "90 days")
           .dropDuplicatesWithinWatermark("event_id")
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .groupBy(col("event_type"))
+      } { sink =>
+        val out = sink.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(round(col("value") * 100, 0).cast("long")).as("cents"))
           .orderBy(col("event_type"))
           .collect()
-        s.catalog.dropTempView(name)
         import s0.implicits._
         out.toSeq.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
           .toDF("event_type", "n", "cents")
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // Streaming chaos fixture (r8, §7.6): ONE bounded-out-of-orderness
     // generator drives THREE stateful operators — dedup-within-
@@ -542,13 +387,14 @@ object AdvancedStreaming {
     // watermark between micro-batches — so the bound holds at every
     // SF (quarter length derives from the observed span; the two span
     // scalars are q261-class driver material).
+    // Hand-wired: three sinks over one staged source, which the
+    // one-query StreamRig.availableNow does not cover.
     "q334_stream_chaos" -> ((s0, d) => {
       val s = s0.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "8")
       val tag = java.util.UUID.randomUUID.toString.replace("-", "")
-      val stage = java.nio.file.Files.createTempDirectory("graft_chaos_")
-      val watch = stage.resolve("watch")
-      java.nio.file.Files.createDirectories(watch)
+      val stage = Files.createTempDirectory("graft_chaos_")
+      val watch = Files.createDirectories(stage.resolve("watch"))
       try {
         val ev = events(s, d)
           .withColumn("day", expr("unix_micros(ts) div 86400000000"))
@@ -566,36 +412,15 @@ object AdvancedStreaming {
           .localCheckpoint(true)
         val cols = Seq("event_id", "ts", "user_id", "event_type",
           "value", "props").map(col)
-        def stageFile(df: DataFrame, n: String, mt: Long): Unit = {
-          val dir = stage.resolve(n + "_dir")
-          df.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-          val src = scala.util.Using.resource(
-            java.nio.file.Files.list(dir)) { st =>
-            val part = st.iterator()
-            var found: java.nio.file.Path = null
-            while (part.hasNext) {
-              val p = part.next()
-              if (p.toString.endsWith(".parquet")) found = p
-            }
-            found
-          }
-          val dst = watch.resolve(n + ".parquet")
-          java.nio.file.Files.copy(src, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mt))
-        }
         for (b <- 0L to 3L) {
           val own = tagged.filter(col("send") === b).select(cols: _*)
           val dups = tagged.filter(col("le") && col("h") >= 150 &&
             col("h") < 300 && col("b") === b - 1).select(cols: _*)
-          stageFile(own.unionByName(dups), f"0$b",
+          StreamRig.stageWatchFile(own.unionByName(dups), watch, f"0$b",
             1000000000000L + b * 100000L)
         }
-        stageFile(ev.limit(1).select(lit(-77L).as("event_id"),
-            to_timestamp(lit("2030-01-01 00:00:00")).as("ts"),
-            lit(-77L).as("user_id"), lit("__wm_flush").as("event_type"),
-            lit(0.0).as("value"), lit("{}").as("props")),
-          "09", 1000000900000L)
+        StreamRig.stageWatchFile(StreamRig.wmSentinel(s, -77L, "__wm_flush"),
+          watch, "09", 1000000900000L)
         val schema = s.read.parquet(watch.toString).schema
         def src0 = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(watch.toString)
@@ -676,10 +501,11 @@ object AdvancedStreaming {
     // atomic. The sink rollup therefore equals the plain batch rollup
     // of ALL events exactly once; a double-counted batch-1 or a lost
     // batch-2 flips it red.
+    // Hand-wired: two runs on one checkpoint into a parquet sink.
     "q197_stream_restart" -> ((s0, d) => {
       val s = s0.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "8")
-      val stage = java.nio.file.Files.createTempDirectory("graft_restart_")
+      val stage = Files.createTempDirectory("graft_restart_")
       try {
         val in = s"$stage/in"; val out = s"$stage/out"
         val ckpt = s"$stage/ckpt"
@@ -722,44 +548,21 @@ object AdvancedStreaming {
     // modeling; the sentinels' own null rows must stay absent.
     // Nullable-on-both-sides ordering keys spell NULLS FIRST
     // explicitly on both engines.
-    "q196_stream_full_outer_join" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_foj_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_foj_")
-      try {
+    "q196_stream_full_outer_join" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
         val schema = stageEventsWithFlushSentinels(s, d, stage)
         def side(tpe: String) = graft.Graft.normalizeTs(
             s.readStream.schema(schema).parquet(stage.toString))
           .filter(col("event_type") === tpe)
-        val clicks = side("click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").as("click_ts"))
-          .withWatermark("click_ts", "1 hour")
-        val purchases = side("purchase")
-          .select(col("event_id").as("purchase_id"),
-            col("user_id").as("p_user"), col("ts").as("p_ts"))
-          .withWatermark("p_ts", "1 hour")
-        val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("click_ts") &&
-            col("p_ts") <= col("click_ts") + expr("interval 12 hours"),
-          "full_outer")
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .select(col("click_id"), col("purchase_id"),
+        intervalJoin(side("click"), side("purchase"), "full_outer")
+      } { sink =>
+        sink.select(col("click_id"), col("purchase_id"),
             coalesce(col("user_id"), col("p_user")).as("uid"),
             (unix_micros(col("p_ts")) - unix_micros(col("click_ts")))
               .as("lag_us"))
           .orderBy(col("click_id").asc_nulls_first,
             col("purchase_id").asc_nulls_first)
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // Stream-stream RIGHT OUTER interval join — the last cell of the
     // join-type matrix (q65 inner, q148 left outer, q171 left semi,
@@ -767,119 +570,48 @@ object AdvancedStreaming {
     // purchases once the watermark passes p_ts (the q196 right-side
     // gate); same sentinel-flush staging, so the oracle is the plain
     // relational right outer join and the sentinels stay absent.
-    "q207_stream_right_outer_join" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_roj_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_roj_")
-      try {
+    "q207_stream_right_outer_join" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
         val schema = stageEventsWithFlushSentinels(s, d, stage)
         def side(tpe: String) = graft.Graft.normalizeTs(
             s.readStream.schema(schema).parquet(stage.toString))
           .filter(col("event_type") === tpe)
-        val clicks = side("click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").as("click_ts"))
-          .withWatermark("click_ts", "1 hour")
-        val purchases = side("purchase")
-          .select(col("event_id").as("purchase_id"),
-            col("user_id").as("p_user"), col("ts").as("p_ts"))
-          .withWatermark("p_ts", "1 hour")
-        val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("click_ts") &&
-            col("p_ts") <= col("click_ts") + expr("interval 12 hours"),
-          "right_outer")
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .select(col("click_id"), col("purchase_id"),
+        intervalJoin(side("click"), side("purchase"), "right_outer")
+      } { sink =>
+        sink.select(col("click_id"), col("purchase_id"),
             col("p_user").as("user_id"),
             (unix_micros(col("p_ts")) - unix_micros(col("click_ts")))
               .as("lag_us"))
           .orderBy(col("purchase_id"), col("click_id").asc_nulls_first)
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
-    "q148_stream_outer_join" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_oj_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_oj_")
-      try {
+    "q148_stream_outer_join" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
         val schema = stageEventsWithFlushSentinels(s, d, stage)
         def side(tpe: String) = graft.Graft.normalizeTs(
             s.readStream.schema(schema).parquet(stage.toString))
           .filter(col("event_type") === tpe)
-        val clicks = side("click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").as("click_ts"))
-          .withWatermark("click_ts", "1 hour")
-        val purchases = side("purchase")
-          .select(col("event_id").as("purchase_id"),
-            col("user_id").as("p_user"), col("ts").as("p_ts"))
-          .withWatermark("p_ts", "1 hour")
-        val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("click_ts") &&
-            col("p_ts") <= col("click_ts") + expr("interval 12 hours"),
-          "left_outer")
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .select(col("click_id"), col("purchase_id"), col("user_id"),
+        intervalJoin(side("click"), side("purchase"), "left_outer")
+      } { sink =>
+        sink.select(col("click_id"), col("purchase_id"), col("user_id"),
             (unix_micros(col("p_ts")) - unix_micros(col("click_ts")))
               .as("lag_us"))
           .orderBy(col("click_id"), col("purchase_id"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
-    "q65_stream_interval_join" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_ij_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val schema = table(s, d, "events").schema
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_ij_")
-      try {
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          stage.resolve("events.parquet"))
+    "q65_stream_interval_join" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
+        val schema = StreamRig.stageEvents(s, d, stage)
         def side(tpe: String) = graft.Graft.normalizeTs(
             s.readStream.schema(schema).parquet(stage.toString))
           .filter(col("event_type") === tpe)
-        val clicks = side("click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").as("click_ts"))
-          .withWatermark("click_ts", "1 hour")
-        val purchases = side("purchase")
-          .select(col("event_id").as("purchase_id"),
-            col("user_id").as("p_user"), col("ts").as("p_ts"))
-          .withWatermark("p_ts", "1 hour")
-        val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("click_ts") &&
-            col("p_ts") <= col("click_ts") + expr("interval 12 hours"))
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .select(col("click_id"), col("purchase_id"), col("user_id"),
+        intervalJoin(side("click"), side("purchase"), "inner")
+      } { sink =>
+        sink.select(col("click_id"), col("purchase_id"), col("user_id"),
             (unix_micros(col("p_ts")) - unix_micros(col("click_ts")))
               .as("lag_us"))
           .orderBy(col("click_id"), col("purchase_id"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // Stream-stream LEFT SEMI interval join — completes the
     // stream-stream family (q65 inner, q148 left outer): "clicks that
@@ -887,44 +619,18 @@ object AdvancedStreaming {
     // how many purchases matched — the existence probe that avoids
     // materializing the N-way fanout the inner join pays. Same
     // watermark bounds on both sides cap the state.
-    "q171_stream_semi_join" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_sj_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val schema = table(s, d, "events").schema
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_sj_")
-      try {
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          stage.resolve("events.parquet"))
+    "q171_stream_semi_join" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
+        val schema = StreamRig.stageEvents(s, d, stage)
         def side(tpe: String) = graft.Graft.normalizeTs(
             s.readStream.schema(schema).parquet(stage.toString))
           .filter(col("event_type") === tpe)
-        val clicks = side("click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").as("click_ts"))
-          .withWatermark("click_ts", "1 hour")
-        val purchases = side("purchase")
-          .select(col("event_id").as("purchase_id"),
-            col("user_id").as("p_user"), col("ts").as("p_ts"))
-          .withWatermark("p_ts", "1 hour")
-        val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("click_ts") &&
-            col("p_ts") <= col("click_ts") + expr("interval 12 hours"),
-          "left_semi")
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .select(col("click_id"), col("user_id"),
+        intervalJoin(side("click"), side("purchase"), "left_semi")
+      } { sink =>
+        sink.select(col("click_id"), col("user_id"),
             unix_micros(col("click_ts")).as("click_us"))
           .orderBy(col("click_id"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // The reference pipeline under Structured Streaming, end-to-end
     // (SURVEY.md §2.10 T1/T2/T4): the SAME envelope batch is delivered
@@ -935,38 +641,26 @@ object AdvancedStreaming {
     // (task.ts:215): watermark + dropDuplicates(id) (Lookback.dedupById)
     // must collapse the redelivery to exactly the batch pipeline's
     // output. Oracle: the same SQL re-derivation as q50.
-    "q53_stream_active911" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      import s.implicits._
-      val name = "stream_a911_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_a911_")
-      try {
+    "q53_stream_active911" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
+        import s.implicits._
         val env = Fixtures.envelopes.toDF("agency_id", "raw")
         env.coalesce(1).write.mode("append").parquet(stage.toString) // run 1
         env.coalesce(1).write.mode("append").parquet(stage.toString) // run 2 (redelivery)
-        val schema = env.schema
         val features = Active911.pipeline(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+          s.readStream.schema(env.schema).option("maxFilesPerTrigger", 1)
             .parquet(stage.toString))
-        val deduped = Lookback.dedupById(
+        Lookback.dedupById(
           features.withColumn("ts", to_timestamp(col("properties.start"))),
           "id", "ts")
-        val q = deduped.writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .select(col("id"), col("type"),
+      } { sink =>
+        sink.select(col("id"), col("type"),
             col("properties.callsign").as("callsign"),
             element_at(col("geometry.coordinates"), 1).as("lon"),
             element_at(col("geometry.coordinates"), 2).as("lat"),
             col("properties.remarks").as("remarks"))
           .orderBy(col("id"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
   )
 
   val oracles: Map[String, String] = Map(

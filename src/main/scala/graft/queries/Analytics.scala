@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Graft.{deleteRecursively, roundz, table}
+import Sources.materialize
+import StreamRig.{stageWatchFile, wmSentinel}
 
 /** Drift / correlation / ranking-evaluation analytics (round 6,
   * SURVEY.md §2.14 EXT): Spearman rank correlation, population
@@ -35,56 +37,31 @@ object Analytics {
   private def day(c: Column): Column =
     expr(s"unix_micros(${c.toString}) div 86400000000")
 
-  /** Write `df` as ONE parquet file named `n`.parquet inside `watch`,
-    * with an explicit mtime so `maxFilesPerTrigger=1` streams files in
-    * a pinned order (q147's staging convention).
+  /** Stage q339's delete-capable fact stream for the streaming IVM rigs
+    * (q341/q359) into `stage`/watch as two ordered files: the base facts
+    * (+1), then the mixed batch (inserts +1 / deletes −1), each row
+    * (segment, custkey, cents, sign). Returns the watch dir.
     */
-  private def stageWatchFile(df: DataFrame, watch: java.nio.file.Path,
-      n: String, mt: Long): Unit = {
-    val dir = watch.getParent.resolve(n + "_" + watch.getFileName + "_dir")
-    df.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    val src = scala.util.Using.resource(java.nio.file.Files.list(dir)) { st =>
-      val it = st.iterator()
-      var found: java.nio.file.Path = null
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.toString.endsWith(".parquet")) found = p
-      }
-      found
-    }
-    val dst = watch.resolve(n + ".parquet")
-    java.nio.file.Files.copy(src, dst)
-    java.nio.file.Files.setLastModifiedTime(dst,
-      java.nio.file.attribute.FileTime.fromMillis(mt))
-  }
-
-  /** One far-future event (§5.8 sentinel-flush): pushes the terminal
-    * watermark past every real window end so append-mode emission is
-    * the plain relational recompute; the sentinel's own window stays
-    * open and never emits.
-    */
-  private def wmSentinel(s: SparkSession, id: Long, tpe: String): DataFrame =
-    s.range(1).select(lit(id).as("event_id"),
-      to_timestamp(lit("2030-01-01 00:00:00")).as("ts"),
-      lit(id).as("user_id"), lit(tpe).as("event_type"),
-      lit(0.0).as("value"), lit("{}").as("props"))
-
-  /** Materialize a small result so the staging dir can be deleted
-    * before returning (Sources.materialize's contract: capped collect,
-    * real plan hash recorded for Bench via the shared registry).
-    */
-  private def materialize(s: SparkSession, name: String, df: DataFrame,
-      maxRows: Int = 10000): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val text = graft.Graft.planScrub(
-      df.queryExecution.optimizedPlan.canonicalized.toString)
-    Sources.planTexts(name) = text
-    Sources.planHashes(name) = graft.Graft.md5_8(text)
-    val rows = df.limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
-      s"Analytics.materialize($name): result exceeds $maxRows rows — " +
-        "materialize is for bounded results only")
-    s.createDataFrame(rows.toSeq.asJava, df.schema)
+  private def stageSignedDeltas(s: SparkSession, d: String,
+      stage: java.nio.file.Path): java.nio.file.Path = {
+    val cust = table(s, d, "customer")
+      .select(col("c_custkey"), col("c_mktsegment"))
+    val ord = table(s, d, "orders").select(col("o_orderkey"),
+      col("o_custkey"),
+      round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
+    def signedDeltas(f: DataFrame, sign: Long): DataFrame =
+      f.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+        .select(col("c_mktsegment").as("segment"),
+          col("c_custkey").as("custkey"), col("cents"),
+          lit(sign).as("sign"))
+    val base = ord.filter(pmod(col("o_orderkey"), lit(10)) =!= 7)
+    val ins = ord.filter(pmod(col("o_orderkey"), lit(10)) === 7)
+    val del = base.filter(pmod(col("o_orderkey"), lit(10)) === 3)
+    val watch = java.nio.file.Files.createDirectories(stage.resolve("watch"))
+    stageWatchFile(signedDeltas(base, 1L), watch, "01", 1000000000000L)
+    stageWatchFile(signedDeltas(ins, 1L)
+      .unionByName(signedDeltas(del, -1L)), watch, "02", 1000000100000L)
+    watch
   }
 
   /** Gap-filled daily series over [min_day, max_day]: (day, x). */
@@ -425,18 +402,11 @@ object Analytics {
     // the plain relational recompute of the unioned aggregate (no
     // watermark arithmetic in the oracle). The sentinels' own windows
     // stay open and never emit.
-    "q273_stream_union" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_union_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val ev = graft.Graft.normalizeTs(table(s, d, "events"))
-      val stage = java.nio.file.Files.createTempDirectory("graft_union_")
-      val watchA = stage.resolve("wa")
-      val watchB = stage.resolve("wb")
-      java.nio.file.Files.createDirectories(watchA)
-      java.nio.file.Files.createDirectories(watchB)
-      try {
+    "q273_stream_union" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
+        val ev = graft.Graft.normalizeTs(table(s, d, "events"))
+        val watchA = java.nio.file.Files.createDirectories(stage.resolve("wa"))
+        val watchB = java.nio.file.Files.createDirectories(stage.resolve("wb"))
         stageWatchFile(ev.filter(col("event_type") === "click"),
           watchA, "01", 1000000000000L)
         stageWatchFile(wmSentinel(s, -81L, "__wm_flush_a"),
@@ -452,22 +422,15 @@ object Analytics {
         val b = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(watchB.toString)
           .withWatermark("ts", "2 hours")
-        val q = a.unionByName(b)
+        a.unionByName(b)
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(round(col("value") * 100, 0).cast("long")).as("cents"))
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .select(unix_micros(col("window.start")).as("win_start_us"),
+      } { sink =>
+        sink.select(unix_micros(col("window.start")).as("win_start_us"),
             col("event_type"), col("n"), col("cents"))
           .orderBy(col("win_start_us"), col("event_type"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // CHAINED stateful operators in one streaming query (the Spark-4
     // multi-stateful surface): a 30-minute windowed aggregate feeds a
@@ -477,17 +440,11 @@ object Analytics {
     // levels; the sentinel's level-1 window never emits, so it never
     // reaches level 2. Oracle recomputes both levels relationally
     // (sub-window count = distinct 30-min slots inside each 2-h slot).
-    "q274_stream_chained_agg" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "stream_chain_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val ev = graft.Graft.normalizeTs(table(s, d, "events"))
-      val t0 = to_timestamp(lit("2024-01-16 00:00:00"))
-      val stage = java.nio.file.Files.createTempDirectory("graft_chain_")
-      val watch = stage.resolve("watch")
-      java.nio.file.Files.createDirectories(watch)
-      try {
+    "q274_stream_chained_agg" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "append") { (s, stage) =>
+        val ev = graft.Graft.normalizeTs(table(s, d, "events"))
+        val t0 = to_timestamp(lit("2024-01-16 00:00:00"))
+        val watch = java.nio.file.Files.createDirectories(stage.resolve("watch"))
         stageWatchFile(ev.filter(col("ts") < t0), watch, "01",
           1000000000000L)
         stageWatchFile(ev.filter(col("ts") >= t0), watch, "02",
@@ -495,7 +452,7 @@ object Analytics {
         stageWatchFile(wmSentinel(s, -83L, "__wm_flush"), watch, "03",
           1000000200000L)
         val schema = s.read.parquet(watch.toString).schema
-        val q = s.readStream.schema(schema)
+        s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(watch.toString)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "30 minutes"), col("event_type"))
@@ -504,19 +461,12 @@ object Analytics {
           .groupBy(window(col("window"), "2 hours"), col("event_type"))
           .agg(sum(col("n")).as("n_events"), sum(col("cents")).as("cents"),
             count(lit(1)).as("n_subwindows"))
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val out = s.table(name)
-          .select(unix_micros(col("window.start")).as("win_start_us"),
+      } { sink =>
+        sink.select(unix_micros(col("window.start")).as("win_start_us"),
             col("event_type"), col("n_events"), col("cents"),
             col("n_subwindows"))
           .orderBy(col("win_start_us"), col("event_type"))
-        s.catalog.dropTempView(name)
-        out
-      } finally deleteRecursively(stage)
-    }),
+      }),
 
     // Streaming IVM bridge (r9, SURVEY §7.6): q339's delete-capable
     // counting maintenance re-expressed as a transformWithState rig
@@ -534,56 +484,28 @@ object Analytics {
     // stream has no base to rescan). Oracle = the from-scratch rollup
     // over the post-batch fact set — batch q339 and this rig must
     // agree with the same SQL contract.
-    "q341_stream_ivm" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val name = "stream_ivm_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val cust = table(s, d, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val ord = table(s, d, "orders").select(col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      def signedDeltas(f: DataFrame, sign: Long): DataFrame =
-        f.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-          .select(col("c_mktsegment").as("segment"),
-            col("c_custkey").as("custkey"), col("cents"),
-            lit(sign).as("sign"))
-      val base = ord.filter(pmod(col("o_orderkey"), lit(10)) =!= 7)
-      val ins = ord.filter(pmod(col("o_orderkey"), lit(10)) === 7)
-      val del = base.filter(pmod(col("o_orderkey"), lit(10)) === 3)
-      val stage = java.nio.file.Files.createTempDirectory("graft_ivm_")
-      val watch = stage.resolve("watch")
-      java.nio.file.Files.createDirectories(watch)
-      try {
-        stageWatchFile(signedDeltas(base, 1L), watch, "01",
-          1000000000000L)
-        stageWatchFile(signedDeltas(ins, 1L)
-          .unionByName(signedDeltas(del, -1L)), watch, "02",
-          1000000100000L)
+    "q341_stream_ivm" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "update") { (s, stage) =>
+        s.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        val watch = stageSignedDeltas(s, d, stage)
         val schema = s.read.parquet(watch.toString).schema
         import s.implicits._
         val in = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(watch.toString)
           .as[graft.streaming.CountingView.DeltaIn]
-        val q = graft.streaming.CountingView.view(s, in)
-          .toDF().writeStream.outputMode("update")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        graft.streaming.CountingView.view(s, in).toDF()
+      } { sink =>
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("segment")).orderBy(col("version").desc)
-        val out = s.table(name)
+        val out = sink
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1 && col("n_orders") > 0)
           .select(col("segment").as("c_mktsegment"), col("n_orders"),
             col("rev_cents"), col("n_customers"))
           .orderBy(col("c_mktsegment"))
-        materialize(s, "q341_stream_ivm", out)
-      } finally deleteRecursively(stage)
-    }),
+        materialize(sink.sparkSession, "q341_stream_ivm", out)
+      }),
 
     // Streaming IVM with retractable EXTREMA (r10, VERDICT-r9 #6):
     // q341's counting bridge composed with q347's support-at-extremum
@@ -600,57 +522,29 @@ object Analytics {
     // an injected accumulator). Oracle = the from-scratch rollup over
     // the post-batch fact set with MAX/MIN — the same contract as
     // batch q339, now met by the stream.
-    "q359_stream_extrema_ivm" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val name = "stream_xivm_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val cust = table(s, d, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val ord = table(s, d, "orders").select(col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      def signedDeltas(f: DataFrame, sign: Long): DataFrame =
-        f.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-          .select(col("c_mktsegment").as("segment"),
-            col("c_custkey").as("custkey"), col("cents"),
-            lit(sign).as("sign"))
-      val base = ord.filter(pmod(col("o_orderkey"), lit(10)) =!= 7)
-      val ins = ord.filter(pmod(col("o_orderkey"), lit(10)) === 7)
-      val del = base.filter(pmod(col("o_orderkey"), lit(10)) === 3)
-      val stage = java.nio.file.Files.createTempDirectory("graft_xivm_")
-      val watch = stage.resolve("watch")
-      java.nio.file.Files.createDirectories(watch)
-      try {
-        stageWatchFile(signedDeltas(base, 1L), watch, "01",
-          1000000000000L)
-        stageWatchFile(signedDeltas(ins, 1L)
-          .unionByName(signedDeltas(del, -1L)), watch, "02",
-          1000000100000L)
+    "q359_stream_extrema_ivm" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "update") { (s, stage) =>
+        s.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        val watch = stageSignedDeltas(s, d, stage)
         val schema = s.read.parquet(watch.toString).schema
         import s.implicits._
         val in = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(watch.toString)
           .as[graft.streaming.CountingView.DeltaIn]
-        val q = graft.streaming.ExtremaView.view(s, in)
-          .toDF().writeStream.outputMode("update")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        graft.streaming.ExtremaView.view(s, in).toDF()
+      } { sink =>
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("segment")).orderBy(col("version").desc)
-        val out = s.table(name)
+        val out = sink
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1 && col("n_orders") > 0)
           .select(col("segment").as("c_mktsegment"), col("n_orders"),
             col("rev_cents"), col("max_cents"), col("min_cents"),
             col("n_customers"))
           .orderBy(col("c_mktsegment"))
-        materialize(s, "q359_stream_extrema_ivm", out)
-      } finally deleteRecursively(stage)
-    }),
+        materialize(sink.sparkSession, "q359_stream_extrema_ivm", out)
+      }),
 
     // CDC-shaped retraction source (r9, SURVEY §7.6 backlog item #3 —
     // completes q341's end-to-end retraction story): the signed deltas
@@ -674,6 +568,8 @@ object Analytics {
     // one file scan per (shard, batch) — no state snapshot rebuild —
     // and the lag window partitions by key, so deriving deltas
     // shuffles O(|changed keys|), never O(state).
+    // Hand-wired: two streaming phases (changelog-checkpointed upstream,
+    // then the replay), the first with its own checkpoint location.
     "q345_state_changelog_cdc" -> ((s0, d) => {
       val s = s0.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "4")
@@ -847,6 +743,7 @@ object Analytics {
     // across restarts, the sink must supply idempotency). Final state
     // must equal the plain batch aggregate — that equality IS the
     // oracle; batch boundaries cannot leak into the result.
+    // Hand-wired: a foreachBatch sink, not StreamRig's memory sink.
     "q277_stream_upsert_sink" -> ((s0, d) => {
       val s = s0.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "8")

@@ -55,8 +55,8 @@ object Sources {
     * turn this into a driver-side OOM — collect is capped at `maxRows`+1
     * and anything over throws instead of ballooning.
     */
-  private def materialize(s: SparkSession, name: String, df: DataFrame,
-                          maxRows: Int = 10000): DataFrame = {
+  private[queries] def materialize(s: SparkSession, name: String,
+      df: DataFrame, maxRows: Int = 10000): DataFrame = {
     import scala.jdk.CollectionConverters._
     val text = graft.Graft.planScrub(
       df.queryExecution.optimizedPlan.canonicalized.toString)
@@ -1400,34 +1400,29 @@ object Sources {
     // the bug class this surface exists to catch — flips the row red.
     // State is O(|keys|); the reader scans one store shard per
     // partition, so the audit parallelizes like any other scan.
-    "q178_state_reader" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val name = "ssr_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val schema = table(s, d, "events").schema
-      val stage = Files.createTempDirectory("graft_ssr_")
-      val ckpt = Files.createTempDirectory("graft_ssr_ck_")
-      try {
-        Files.copy(Paths.get(s"$d/events.parquet"),
-          stage.resolve("events.parquet"))
-        val q = s.readStream.schema(schema).parquet(stage.toString)
+    "q178_state_reader" -> ((s0, d) =>
+      StreamRig.availableNow(s0, "complete") { (s, stage) =>
+        // a session-default checkpoint root keeps the query's checkpoint
+        // (at <root>/<query name>) after the query ends, for the reader
+        s.conf.set("spark.sql.streaming.checkpointLocation",
+          stage.resolve("ckpt").toString)
+        val in = stage.resolve("in")
+        s.readStream.schema(StreamRig.stageEvents(s, d, in))
+          .parquet(in.toString)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(name)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.catalog.dropTempView(name)
+      } { sink =>
+        val s = sink.sparkSession
+        val ckpt = scala.util.Using.resource(Files.list(Paths.get(
+          s.conf.get("spark.sql.streaming.checkpointLocation"))))(
+          _.findFirst().get())
         materialize(s, "q178_state_reader",
           s.read.format("statestore").option("path", ckpt.toString).load()
             .select(col("key.event_type").as("event_type"),
               col("value.count").as("n"), col("value.sum").as("cents"))
             .orderBy(col("event_type")))
-      } finally { deleteRecursively(stage); deleteRecursively(ckpt) }
-    }),
+      }),
 
     // File-source option surface: recursiveFileLookup walks an
     // arbitrary directory tree (partition inference OFF — the escape

@@ -133,6 +133,24 @@ class Active911Spec extends SparkSpec {
     val a1 = alerts.find(_.getAs[String]("id") == "1").get
     assert(a1.getAs[String]("description") == "Ünïcôde, \"quoted\"")
     assert(a1.getAs[String]("responses") == "line one\nline two")
+    // one county-sized envelope: 3,000 alerts, each with a multi-line
+    // quoted responder log, must decode every row (the record split is
+    // linear in the blob, with no per-record regex recursion)
+    val n = 3000
+    val bulk = Fixtures.csv((1 to n).map(i => Fixtures.row(
+      "id" -> i.toString, "description" -> s"alert $i, \"bulk\"",
+      "lat" -> "1", "lon" -> "1", "sent" -> "12/08/2025 12:00:00 UTC",
+      "responses" -> s"12:00 unit $i\n12:05 \"on scene\", $i")))
+    val bulkEnv = Seq((2, Fixtures.envelope(bulk))).toDF("agency_id", "raw")
+    val rows = Active911.alertsFromEnvelopes(bulkEnv)
+      .select(col("id"), col("description"), col("responses")).collect()
+    assert(rows.map(_.getString(0)).sorted.toSeq ==
+      (1 to n).map(_.toString).sorted)
+    rows.foreach { r =>
+      assert(r.getString(1) == s"alert ${r.getString(0)}, \"bulk\"")
+      assert(r.getString(2) ==
+        s"12:00 unit ${r.getString(0)}\n12:05 \"on scene\", ${r.getString(0)}")
+    }
   }
 
   test("pipeline plan is shuffle-free (scales embarrassingly)") {

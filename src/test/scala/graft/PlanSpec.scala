@@ -468,9 +468,8 @@ class PlanSpec extends SparkSpec {
         "kmeans centroids per iteration + PCA basis — k x dim model"),
       "graft/ext/Corpus.scala" -> (1,
         "limit(1) scalar — one decontamination cutoff row"),
-      "graft/queries/Analytics.scala" -> (2,
-        "maxRows+1 guard in the streaming-rig materializer (limit-capped) " +
-          "+ q345's distinct batch ids (|micro-batches|)"),
+      "graft/queries/Analytics.scala" -> (1,
+        "q345's distinct batch ids (|micro-batches|)"),
       "graft/queries/Ext.scala" -> (4,
         "8-query probe panels for the ANN rigs — fixed probe-set size; " +
           "r13 fused recall rigs: q331's per-leg hit counts (8 rows) " +
@@ -520,5 +519,39 @@ class PlanSpec extends SparkSpec {
     assert(drift.isEmpty,
       "unjustified .collect() drift (add a bounded-material justification " +
         s"to the allowlist or remove the collect):\n${drift.mkString("\n")}")
+  }
+
+  test("source lint: streaming-rig wiring (memory sink, AvailableNow " +
+      "trigger) appears only in StreamRig and the hand-wired rigs") {
+    // Each entry: file -> (count of `format("memory")` plus
+    // `Trigger.AvailableNow()` sites, why that rig cannot go through
+    // StreamRig.availableNow). A rig that writes the lifecycle out by
+    // hand again fails this spec until it is justified here.
+    val allow: Map[String, (Int, String)] = Map(
+      "StreamRig.scala" -> (2, "the helper itself"),
+      "AdvancedStreaming.scala" -> (7,
+        "q334's three memory sinks over one source (3 + 3); q197's " +
+          "restart loop into a parquet sink (1)"),
+      "Analytics.scala" -> (5,
+        "q345's two phases, the first with its own checkpoint (2 + 2); " +
+          "q277's foreachBatch sink (1)"))
+    val qdir = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    val site = "format\\(\"memory\"\\)|Trigger\\.AvailableNow\\(\\)".r
+    import scala.jdk.CollectionConverters._
+    val found = scala.util.Using.resource(java.nio.file.Files.list(qdir))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).map { p =>
+        p.getFileName.toString ->
+          site.findAllIn(java.nio.file.Files.readString(p)).size
+      }.filter(_._2 > 0).toMap)
+    val drift = (found.keySet ++ allow.keySet).toSeq.sorted.flatMap { f =>
+      val got = found.getOrElse(f, 0)
+      val want = allow.get(f).map(_._1).getOrElse(0)
+      if (got != want) Some(s"$f: $got sites, allowlisted $want")
+      else None
+    }
+    assert(drift.isEmpty,
+      "streaming-rig wiring outside StreamRig (port the rig to " +
+        "StreamRig.availableNow or justify it here):\n" +
+        drift.mkString("\n"))
   }
 }
