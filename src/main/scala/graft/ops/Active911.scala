@@ -18,7 +18,10 @@ import org.apache.spark.sql.types._
   *    last-writer-wins values but first-insertion iteration order) is done
   *    with array higher-order functions *inside the row*, not a
   *    groupBy+window — the 1:N explode/re-group never needs an exchange
-  *    because the N side is embedded in the row to begin with.
+  *    because the N side is embedded in the row to begin with. The dedup
+  *    is one `aggregate` fold over links built once: in Spark 4.1 array
+  *    higher-order functions are interpreted, so an array referenced
+  *    inside a lambda is recomputed for every element.
   *  - A window/groupBy formulation of the same dedup is exercised
   *    separately by the relational query suite (SURVEY.md §2.6 A1).
   */
@@ -207,38 +210,52 @@ object Active911 {
       .filter(!needFix || placeValid)
   }
 
+  /** One responder link, the element type of [[responseLinks]]. */
+  private val Link: StructType = StructType(
+    Seq("relation", "callsign", "remarks", "production_time")
+      .map(StructField(_, StringType, nullable = true)))
+
   /** Responder links from the embedded free-text log (reference
     * `task.ts:187-209`): split on newlines, keep `"Got a response of "`
     * lines, regex-extract (unmatched → 'Unknown'), then dedup per
     * callsign with JS-Map semantics — LAST occurrence wins the value,
     * FIRST occurrence fixes the output position. All in-row (no shuffle).
+    *
+    * Each line is regex-matched once (3 extracts: response, name, time;
+    * the pattern's `(.+?)` needs a character, so an empty name means no
+    * match) and the dedup is one `aggregate` fold that replaces a held
+    * callsign's slot in place or appends a new one. In Spark 4.1 array
+    * higher-order functions are interpreted, with no subexpression
+    * elimination inside a lambda, so an array referenced inside a lambda
+    * is recomputed for every element. Each stage here therefore reads the
+    * previous one only as its argument, never from inside its lambda.
     */
   def responseLinks(responses: Column): Column = {
     val lines = filter(split(coalesce(responses, lit("")), "\n"),
       l => l.startsWith("Got a response of "))
-    val entries = transform(lines, l => {
-      val matched = regexp_extract(l, ResponseRegex, 0) =!= ""
-      val name = when(matched, trim(regexp_extract(l, ResponseRegex, 2)))
-        .otherwise("Unknown")
+    val groups = transform(lines, l => struct(
+      regexp_extract(l, ResponseRegex, 1).as("response"),
+      regexp_extract(l, ResponseRegex, 2).as("name"),
+      regexp_extract(l, ResponseRegex, 4).as("time")))
+    val links = transform(groups, g => {
+      val matched = g.getField("name") =!= ""
       struct(
-        name.as("key"),
         lit("t-s").as("relation"),
-        name.as("callsign"),
-        when(matched, trim(regexp_extract(l, ResponseRegex, 1)))
+        when(matched, trim(g.getField("name")))
+          .otherwise("Unknown").as("callsign"),
+        when(matched, trim(g.getField("response")))
           .otherwise("Unknown").as("remarks"),
-        when(matched,
-          isoUtc(parseTime(trim(regexp_extract(l, ResponseRegex, 4)))))
+        when(matched, isoUtc(parseTime(trim(g.getField("time")))))
           .as("production_time"))
     })
-    val keysInOrder = array_distinct(transform(entries, e => e.getField("key")))
-    transform(keysInOrder, k => {
-      val last = element_at(filter(entries, e => e.getField("key") === k), -1)
-      struct(
-        last.getField("relation").as("relation"),
-        last.getField("callsign").as("callsign"),
-        last.getField("remarks").as("remarks"),
-        last.getField("production_time").as("production_time"))
-    })
+    val noLinks = array().cast(ArrayType(Link, containsNull = false))
+    // the fold's result is nullable; the coalesce keeps `links` non-null
+    coalesce(aggregate(links, noLinks, (acc, e) => {
+      val sameCallsign = (a: Column) => a.getField("callsign") === e.getField("callsign")
+      when(exists(acc, sameCallsign),
+        transform(acc, a => when(sameCallsign(a), e).otherwise(a)))
+        .otherwise(concat(acc, array(e)))
+    }), noLinks)
   }
 
   private val Ind32 = " " * 32

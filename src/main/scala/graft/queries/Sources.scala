@@ -1242,8 +1242,12 @@ object Sources {
             .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
             .option("path", s"$stage/l").saveAsTable(lt)
         }
-        Await.result(wo, Duration.Inf)
-        Await.result(wl, Duration.Inf)
+        // Both writes finish before either outcome is read, so a failed
+        // orders write cannot start the cleanup below while the lineitem
+        // write is still running.
+        Seq(wo, wl).foreach(Await.ready(_, Duration.Inf))
+        wo.value.get.get
+        wl.value.get.get
         materialize(s, "q140_bucketed_join", s.table(lt)
           .join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_orderpriority"))

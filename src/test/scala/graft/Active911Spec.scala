@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, RegExpExtract}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Active911, Fixtures}
@@ -109,6 +110,20 @@ class Active911Spec extends SparkSpec {
     assert(jane.getString(3) == "2025-12-08T23:29:05.000Z") // EST −5
     val unknown = links(2)
     assert(unknown.getString(2) == "Unknown" && unknown.getString(3) == null)
+  }
+
+  test("links: each responder line is regex-matched once per row") {
+    // array higher-order functions run interpreted, so an array read
+    // inside a lambda is rebuilt for every element; the dedup must fold
+    // over entries built once, not filter them once per key
+    val plan = Seq("x").toDF("r")
+      .select(Active911.responseLinks(col("r"))).queryExecution.analyzed
+    def count(pf: PartialFunction[Expression, Expression]): Int =
+      plan.expressions.map(_.collect(pf).size).sum
+    // 3 capture groups per line, plus parseTime's own fallback extract
+    assert(count { case e: RegExpExtract => e } <= 4)
+    // the one filter keeps the "Got a response of " lines
+    assert(count { case e: ArrayFilter => e } == 1)
   }
 
   test("remarks: byte-exact template whitespace (task.ts:221-225)") {

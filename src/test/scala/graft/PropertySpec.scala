@@ -113,49 +113,75 @@ class PropertySpec extends SparkSpec {
   // --- A1: last-wins dedup, first-occurrence key order ------------------
 
   test("responseLinks: last-wins per callsign, keys in first-appearance order") {
-    val names = Seq("Alice", "Bob Smith", "Carol")
+    // "Unknown" is also a real callsign, colliding with unmatched lines
+    val names = Seq("Alice", "Bob Smith", "Carol", "Unknown")
     val resps = Seq("Responding", "Unavailable", "On Scene")
+    // the reference's zone table (task.ts:45-64) for the abbreviations
+    // drawn here, kept apart from Active911.TimezoneMappings; CEST, BST
+    // and a missing abbreviation take the UTC fallback
+    val zones = Map("EST" -> "America/New_York", "PDT" -> "America/Los_Angeles",
+      "MST" -> "America/Denver", "HST" -> "Pacific/Honolulu",
+      "HDT" -> "Pacific/Honolulu")
+    val clocks = zones.keys.toSeq ++ Seq("CEST", "BST", "")
+    val pad = Gen.oneOf("", " ", "  ")
+    // few distinct instants, so repeated callsigns often tie on time
+    val timeGen = Gen.frequency(
+      8 -> (for {
+        da <- Gen.choose(10, 11); mi <- Gen.oneOf(0, 30); abbr <- Gen.oneOf(clocks)
+      } yield f"12/$da/2025 10:$mi%02d:00" + (if (abbr.isEmpty) "" else s" $abbr")),
+      1 -> Gen.const("later"))
     val lineGen = Gen.frequency(
-      5 -> (for {
-        n <- Gen.oneOf(names); r <- Gen.oneOf(resps)
-        id <- Gen.choose(100, 999); mi <- Gen.choose(0, 59)
-      } yield f"Got a response of $r to $n($id) at 12/8/2025 10:$mi%02d:00 EST."),
+      6 -> (for {
+        n <- Gen.oneOf(names); r <- Gen.oneOf(resps); t <- timeGen
+        p1 <- pad; p2 <- pad; p3 <- pad; id <- Gen.choose(1, 999)
+      } yield s"Got a response of $p1$r to $p2$n$p3($id) at $t."),
+      1 -> Gen.oneOf(names).map(n => s"Got a response of Responding to $n(x1) at now."),
       1 -> Gen.const("Got a response of malformed line without the shape"),
       1 -> Gen.const("random chatter that is filtered out"))
-    val logGen = Gen.choose(0, 10).flatMap(n => Gen.listOfN(n, lineGen))
-    val cases = sample(logGen, 80, 21L).zipWithIndex
-    val df = cases.map { case (ls, i) => (i.toLong, ls.mkString("\n")) }
+    val logGen = Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, lineGen))
+    val cases = sample(logGen, 120, 21L).map(ls => Option(ls.mkString("\n"))) ++
+      Seq(None, Some(""))
+    val df = cases.zipWithIndex.map { case (r, i) => (i.toLong, r) }
       .toDF("case_id", "responses")
     val got = df.select(col("case_id"),
         to_json(Active911.responseLinks(col("responses"))).as("links"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
 
-    val rx = Active911.ResponseRegex.r
-    val estFmt = DateTimeFormatter.ofPattern("M/d/yyyy H:mm:ss")
-    cases.foreach { case (ls, i) =>
+    // the reference's line pattern (task.ts:121)
+    val rx = "Got a response of (.+?) to (.+?)\\((\\d+)\\) at (.+?)\\.".r
+    val fmt = DateTimeFormatter.ofPattern("M/d/yyyy H:mm:ss")
+    val isoFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+      .withZone(ZoneId.of("UTC"))
+    def instant(t: String): Option[String] = {
+      val parts = t.split(" ")
+      val local = zones.get(parts.last) match {
+        case Some(zone) => Some(parts.init.mkString(" ") -> zone)
+        case None => "^(\\d{1,2}/\\d{1,2}/\\d{4} \\d{1,2}:\\d{2}:\\d{2})".r
+          .findFirstIn(t).map(_ -> "UTC")
+      }
+      local.map { case (wall, zone) =>
+        isoFmt.format(LocalDateTime.parse(wall, fmt).atZone(ZoneId.of(zone)).toInstant)
+      }
+    }
+    cases.zipWithIndex.foreach { case (raw, i) =>
       // driver-side model of the reference's Map.set loop (task.ts:187-209)
-      val entries = ls.filter(_.startsWith("Got a response of ")).map { l =>
+      val lines = raw.toSeq.flatMap(_.split("\n", -1))
+      val entries = lines.filter(_.startsWith("Got a response of ")).map { l =>
         rx.findFirstMatchIn(l) match {
-          case Some(m) =>
-            val t = LocalDateTime.parse(m.group(4).trim.stripSuffix(" EST"), estFmt)
-              .atZone(ZoneId.of("America/New_York")).toInstant
-            val iso = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-              .withZone(ZoneId.of("UTC")).format(t)
-            (m.group(2).trim, m.group(1).trim, Some(iso))
+          case Some(m) => (m.group(2).trim, m.group(1).trim, instant(m.group(4).trim))
           case None => ("Unknown", "Unknown", None)
         }
       }
       val keyOrder = entries.map(_._1).distinct
       val lastByKey = entries.groupBy(_._1).map { case (k, es) => k -> es.last }
-      val expected = keyOrder.map { k =>
+      val expJson = keyOrder.map { k =>
         val (_, remarks, time) = lastByKey(k)
-        Seq(Some("t-s"), Some(k), Some(remarks), time)
-      }
-      val expJson = expected.map(f =>
-        Seq("relation", "callsign", "remarks", "production_time").zip(f)
+        Seq("relation" -> Some("t-s"), "callsign" -> Some(k),
+          "remarks" -> Some(remarks), "production_time" -> time)
           .collect { case (n, Some(v)) => s""""$n":"$v"""" }
-          .mkString("{", ",", "}")).mkString("[", ",", "]")
-      assert(got(i.toLong) == expJson, s"case $i:\n${ls.mkString("\n")}")
+          .mkString("{", ",", "}")
+      }.mkString("[", ",", "]")
+      assert(got(i.toLong) == expJson, s"case $i:\n${raw.getOrElse("<null>")}")
     }
   }
 

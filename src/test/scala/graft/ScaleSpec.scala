@@ -174,18 +174,19 @@ class ScaleSpec extends SparkSpec {
   test("bucketed tables join without a shuffle (pre-partitioned co-location)") {
     // external tables with explicit paths — the in-memory catalog only
     // tracks metadata, nothing lands in the default warehouse dir
-    val wh = java.nio.file.Files.createTempDirectory("graft_bucket_").toString
+    val whPath = java.nio.file.Files.createTempDirectory("graft_bucket_")
+    val wh = whPath.toString
     val d = "/root/testdata/sf0.001"
     val nBuckets = 8
-    Graft.table(spark, d, "orders")
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")
-      .option("path", s"$wh/orders_b").saveAsTable("orders_b")
-    Graft.table(spark, d, "lineitem")
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "l_orderkey").sortBy("l_orderkey")
-      .option("path", s"$wh/lineitem_b").saveAsTable("lineitem_b")
     try {
+      Graft.table(spark, d, "orders")
+        .write.mode("overwrite")
+        .bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"$wh/orders_b").saveAsTable("orders_b")
+      Graft.table(spark, d, "lineitem")
+        .write.mode("overwrite")
+        .bucketBy(nBuckets, "l_orderkey").sortBy("l_orderkey")
+        .option("path", s"$wh/lineitem_b").saveAsTable("lineitem_b")
       val joined = spark.table("lineitem_b")
         .join(spark.table("orders_b"), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
@@ -202,6 +203,7 @@ class ScaleSpec extends SparkSpec {
     } finally {
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
+      Graft.deleteRecursively(whPath)
     }
   }
 
@@ -214,35 +216,40 @@ class ScaleSpec extends SparkSpec {
     // scan — 7 of 10 partition directories are never read. Plan must
     // carry a dynamicpruning expression; results must equal the
     // DPP-off session.
-    val wh = java.nio.file.Files.createTempDirectory("graft_dpp_").toString
-    val d0 = "/root/testdata/sf0.01"
-    Graft.table(spark, d0, "lineitem")
-      .withColumn("pk", pmod(col("l_orderkey"), lit(10)))
-      .write.mode("overwrite").partitionBy("pk").parquet(s"$wh/fact")
-    Graft.table(spark, d0, "nation")
-      .select(pmod(col("n_nationkey"), lit(10)).as("k"), col("n_name"))
-      .dropDuplicates("k")
-      .write.mode("overwrite").parquet(s"$wh/dim")
-    def run(s: org.apache.spark.sql.SparkSession): (String, Long) = {
-      val fact = s.read.parquet(s"$wh/fact")
-      val dim = s.read.parquet(s"$wh/dim")
-        .filter(col("n_name").isin("NATION_0", "NATION_1", "NATION_2"))
-      val j = fact.join(dim, col("pk") === col("k"))
-        .agg(count(lit(1))).as("n")
-      (j.queryExecution.executedPlan.toString, j.head().getLong(0))
+    val whPath = java.nio.file.Files.createTempDirectory("graft_dpp_")
+    val wh = whPath.toString
+    try {
+      val d0 = "/root/testdata/sf0.01"
+      Graft.table(spark, d0, "lineitem")
+        .withColumn("pk", pmod(col("l_orderkey"), lit(10)))
+        .write.mode("overwrite").partitionBy("pk").parquet(s"$wh/fact")
+      Graft.table(spark, d0, "nation")
+        .select(pmod(col("n_nationkey"), lit(10)).as("k"), col("n_name"))
+        .dropDuplicates("k")
+        .write.mode("overwrite").parquet(s"$wh/dim")
+      def run(s: org.apache.spark.sql.SparkSession): (String, Long) = {
+        val fact = s.read.parquet(s"$wh/fact")
+        val dim = s.read.parquet(s"$wh/dim")
+          .filter(col("n_name").isin("NATION_0", "NATION_1", "NATION_2"))
+        val j = fact.join(dim, col("pk") === col("k"))
+          .agg(count(lit(1))).as("n")
+        (j.queryExecution.executedPlan.toString, j.head().getLong(0))
+      }
+      val on = spark.newSession()
+      on.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled",
+        "true")
+      val off = spark.newSession()
+      off.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled",
+        "false")
+      val (planOn, nOn) = run(on)
+      val (planOff, nOff) = run(off)
+      assert(planOn.contains("dynamicpruning"),
+        s"no dynamic pruning expression in:\n$planOn")
+      assert(!planOff.contains("dynamicpruning"))
+      assert(nOn == nOff && nOn > 0, s"DPP changed the answer: $nOn vs $nOff")
+    } finally {
+      Graft.deleteRecursively(whPath)
     }
-    val on = spark.newSession()
-    on.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled",
-      "true")
-    val off = spark.newSession()
-    off.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled",
-      "false")
-    val (planOn, nOn) = run(on)
-    val (planOff, nOff) = run(off)
-    assert(planOn.contains("dynamicpruning"),
-      s"no dynamic pruning expression in:\n$planOn")
-    assert(!planOff.contains("dynamicpruning"))
-    assert(nOn == nOff && nOn > 0, s"DPP changed the answer: $nOn vs $nOff")
   }
 
   test("CBO column stats flip a filtered dim join from sort-merge to " +
@@ -262,7 +269,8 @@ class ScaleSpec extends SparkSpec {
     // the 16 KB threshold without stats, while the 49-row filtered
     // estimate with column stats is a couple of KB — safely below
     val d = "/root/testdata/sf0.1"
-    val wh = java.nio.file.Files.createTempDirectory("graft_cbo_").toString
+    val whPath = java.nio.file.Files.createTempDirectory("graft_cbo_")
+    val wh = whPath.toString
     s.sql("DROP TABLE IF EXISTS g_cbo_dim")
     s.sql("DROP TABLE IF EXISTS g_cbo_fact")
     try {
@@ -298,6 +306,7 @@ class ScaleSpec extends SparkSpec {
     } finally {
       s.sql("DROP TABLE IF EXISTS g_cbo_dim")
       s.sql("DROP TABLE IF EXISTS g_cbo_fact")
+      Graft.deleteRecursively(whPath)
     }
   }
 }
