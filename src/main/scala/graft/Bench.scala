@@ -30,6 +30,10 @@ object Bench {
     "q341_stream_ivm", "q345_state_changelog_cdc",
     "q359_stream_extrema_ivm")
 
+  /** `Class: message` of a failed run, for the bench JSON's "errors". */
+  private def describe(e: Throwable): String =
+    s"${e.getClass.getName}: ${e.getMessage}"
+
   private[graft] def median3(ts: Seq[Double]): Double =
     ts.sorted.apply(ts.size / 2)
 
@@ -153,7 +157,8 @@ object Bench {
     // (best-of-N hides a systematic slowdown; median resists one outlier
     // in either direction). A query that throws in ANY pass is reported
     // under "failed" and excluded from the totals — a broken query must
-    // not read as a fast success.
+    // not read as a fast success. Its first exception, as
+    // `Class: message`, goes under "errors" so the failure says why.
     // Opt-in (SPARK_GRAFT_GC_BETWEEN=1): force a full GC before each
     // query's timed passes, to isolate whether a straggler (q226-class,
     // r6) is paying another query's garbage. The driver NEVER sets it —
@@ -161,30 +166,35 @@ object Bench {
     val gcBetween = sys.env.contains("SPARK_GRAFT_GC_BETWEEN")
     val results = ordered.map { case (name, fn) =>
       if (gcBetween) { System.gc(); Thread.sleep(50) }
-      val times = (1 to 3).map { _ =>
+      val passes = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
+        try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => Left(describe(e)) }
       }
-      (name, times, if (times.contains(-1.0)) None else Some(median3(times)))
+      val times = passes.map(_.getOrElse(-1.0))
+      (name, times, if (times.contains(-1.0)) None else Some(median3(times)),
+        passes.collectFirst { case Left(err) => err })
     }
     // Stall re-pass (r9): one isolated re-time per suspect, AFTER the
     // full run (so the re-time itself sits outside any stall window
     // that covered the block). FLOOR rigs excluded — their swings are
     // micro-batch scheduling, already auto-excluded from plan triage.
     val stalls = results.collect {
-      case (name, times, Some(_))
+      case (name, times, Some(_), _)
         if !FLOOR(name) && stallSuspect(times, refMed.get(name)) =>
         System.gc(); Thread.sleep(100)
         val t0 = System.nanoTime()
         val iso = try {
           SparkEntry.queries(name)(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+          Right((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable => Left(describe(e)) }
         name -> iso
     }
-    val ok = results.collect { case (n, _, Some(t)) => n -> t }
-    val failed = results.collect { case (n, _, None) => n }
+    val ok = results.collect { case (n, _, Some(t), _) => n -> t }
+    val failed = results.collect { case (n, _, None, _) => n }
+    // a re-time can only fail for a query whose timed passes all passed
+    val errors = results.collect { case (n, _, _, Some(err)) => n -> err } ++
+      stalls.collect { case (n, Left(err)) => n -> err }
     val qs = ok.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val ps = plans.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
@@ -192,14 +202,17 @@ object Bench {
     val fl = ordered.map(_._1).filter(FLOOR)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     // per-pass timings: stall forensics becomes one jq call, not a rerun
-    val pp = results.map { case (n, ts, _) =>
+    val pp = results.map { case (n, ts, _, _) =>
       "\"" + n + "\":" + ts.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    val st = stalls.map { case (n, iso) => "\"" + n + "\":" + iso }
+    val st = stalls.map { case (n, iso) => "\"" + n + "\":" + iso.getOrElse(-1.0) }
+      .mkString("{", ",", "}")
+    val es = errors.map { case (n, err) =>
+      "\"" + n + "\":\"" + Graft.jsonEscape(err) + "\"" }
       .mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"plans":$ps,"floors":$fl,"passes":$pp,"stalls":$st,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"plans":$ps,"floors":$fl,"passes":$pp,"stalls":$st,"errors":$es,"sf":"$sfDir"}"""
     println(line)
     // also persist to a file: the driver's log capture truncates stdout
     // (r2 lost the totals), so the bench artifact must be self-contained

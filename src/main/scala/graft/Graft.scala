@@ -96,6 +96,25 @@ object Graft {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
 
+  /** Full JSON string escaping (the sink's error report, reference
+    * `JSON.stringify`, task.ts:241; Bench's "errors"): quote, backslash,
+    * and all control chars — a newline in a message must not produce
+    * invalid JSON.
+    */
+  def jsonEscape(s: String): String = {
+    val sb = new StringBuilder(s.length + 8)
+    s.foreach {
+      case '\\' => sb.append("\\\\")
+      case '"'  => sb.append("\\\"")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.toString
+  }
+
   /** 16-hex md5 prefix — the batch partition key for
     * [[graft.ops.Staged.prepublishSlices]] (r13, VERDICT-r12 #3): at the
     * 10⁶-file layouts the batch prepass targets, 8-hex keys collide with

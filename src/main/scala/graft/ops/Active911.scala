@@ -1,8 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.text.ParseException
+import java.time.{DateTimeException, ZoneOffset}
+import java.util.regex.Pattern
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, TimestampFormatter}
+import org.apache.spark.sql.catalyst.util.LegacyDateFormats.SIMPLE_DATE_FORMAT
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference dataflow (dfpc-coe/etl-active911 `task.ts:98-243`)
   * re-expressed as composable, shuffle-free DataFrame transforms.
@@ -11,19 +21,27 @@ import org.apache.spark.sql.types._
   * responder-log explode/extract/dedup → GeoJSON Point Feature.
   *
   * Design notes (Spark-first, 100 TB stance):
-  *  - Every step here is a narrow transformation over built-in, codegen'd
-  *    expressions — the whole pipeline runs with ZERO shuffles; one input
-  *    split (an agency's envelope batch) never leaves its executor.
+  *  - Every step here is a narrow transformation — the whole pipeline
+  *    runs with ZERO shuffles; one input split (an agency's envelope
+  *    batch) never leaves its executor.
+  *  - Below the sink the pipeline is ONE whole-stage-codegen stage, and
+  *    each envelope's JSON and each CSV record is parsed once. Two things
+  *    keep it so. No array higher-order function (`transform`, `filter`,
+  *    `aggregate`) appears: in Spark 4.1 they are `CodegenFallback`, and
+  *    one of them drops its whole Filter or Project out of codegen, so
+  *    every task regenerates that operator's code. And both parses are
+  *    generators (`explode`/`inline` of a one-element array): the
+  *    optimizer pushes a filter below a plain `from_csv`/`from_json`
+  *    projection by pasting the parse into the predicate once per column
+  *    read, but it cannot push a predicate on generated columns below the
+  *    `Generate`.
   *  - The responder dedup (reference `task.ts:187-209`, a JS `Map` with
   *    last-writer-wins values but first-insertion iteration order) is done
-  *    with array higher-order functions *inside the row*, not a
-  *    groupBy+window — the 1:N explode/re-group never needs an exchange
-  *    because the N side is embedded in the row to begin with. The dedup
-  *    is one `aggregate` fold over links built once: in Spark 4.1 array
-  *    higher-order functions are interpreted, so an array referenced
-  *    inside a lambda is recomputed for every element.
-  *  - A window/groupBy formulation of the same dedup is exercised
-  *    separately by the relational query suite (SURVEY.md §2.6 A1).
+  *    *inside the row*, not a groupBy+window — the 1:N explode/re-group
+  *    never needs an exchange because the N side is embedded in the row
+  *    to begin with. A window/groupBy formulation of the same dedup is
+  *    exercised separately by the relational query suite (SURVEY.md §2.6
+  *    A1).
   */
 object Active911 {
 
@@ -101,6 +119,10 @@ object Active911 {
   def unwrapJsonp(c: Column): Column =
     regexp_replace(regexp_replace(trim(c), "^.*?\\(", ""), "\\)$", "")
 
+  /** The leading `M/d/yyyy H:mm:ss` of an unzoned time (group 1). */
+  private val FallbackDateRegex =
+    "^(\\d{1,2}/\\d{1,2}/\\d{4} \\d{1,2}:\\d{2}:\\d{2})"
+
   /** `parseTime` (reference `task.ts:66-76`): split off the trailing
     * token; if it is a mapped tz abbreviation, parse the rest as
     * `MM/DD/YYYY HH:mm:ss` wall time in that zone; otherwise parse the
@@ -129,8 +151,7 @@ object Active911 {
     val datePart = array_join(slice(parts, lit(1), size(parts) - 1), " ")
     val mapped = to_utc_timestamp(
       try_to_timestamp(datePart, lit("M/d/yyyy H:mm:ss")), zone)
-    val fallbackDate =
-      regexp_extract(t, "^(\\d{1,2}/\\d{1,2}/\\d{4} \\d{1,2}:\\d{2}:\\d{2})", 1)
+    val fallbackDate = regexp_extract(t, FallbackDateRegex, 1)
     val fallback = try_to_timestamp(fallbackDate, lit("M/d/yyyy H:mm:ss"))
     when(zone.isNotNull, mapped).otherwise(fallback)
   }
@@ -155,6 +176,17 @@ object Active911 {
     regexp_extract_all(regexp_replace(text, "\r\n", "\n"),
       lit("(?:[^\"\n]++|\"[^\"]*+\")++"), lit(0))
 
+  /** Envelope rows with their parsed body as one `_env` struct column
+    * (`result`, `message`), pass-through columns first. The JSON parse
+    * is the element of a one-element array exploded by a generator, so a
+    * filter on `_env` cannot be pushed below it and copy the parse.
+    */
+  private def parsedEnvelopes(envelopes: DataFrame, rawCol: String): (Seq[Column], DataFrame) = {
+    val passThrough = envelopes.columns.filterNot(_ == rawCol).map(col).toSeq
+    (passThrough, envelopes.select((passThrough :+ explode(array(
+      from_json(unwrapJsonp(col(rawCol)), envelopeSchema))).as("_env")): _*))
+  }
+
   /** Decode wire envelopes into alert rows (reference `task.ts:155-170`):
     * JSONP unwrap → JSON parse → base64 decode → CSV parse against
     * [[alertSchema]] (header row dropped; header order is the export's
@@ -162,28 +194,29 @@ object Active911 {
     * them through [[envelopeErrors]] (the reference's error side channel,
     * `task.ts:162-165`). Pass-through columns of `envelopes` (e.g.
     * `agency_id`) are preserved.
+    *
+    * The CSV parse is a generator (`inline` of a one-element array), so
+    * each record is parsed once: were it a projection, the optimizer
+    * would push the coordinate filter of [[fixCoordinates]] below it and
+    * paste a pruned `from_csv` into the predicate for every column read.
     */
   def alertsFromEnvelopes(envelopes: DataFrame, rawCol: String = "raw"): DataFrame = {
-    val passThrough = envelopes.columns.filterNot(_ == rawCol).map(col).toSeq
-    val env = envelopes
-      .withColumn("_env", from_json(unwrapJsonp(col(rawCol)), envelopeSchema))
+    val (passThrough, env) = parsedEnvelopes(envelopes, rawCol)
+    env
       .filter(coalesce(col("_env.result"), lit("")) =!= "error")
-    val recs = env
       .select((passThrough :+
         posexplode(csvRecords(decode(unbase64(col("_env.message")), "UTF-8")))): _*)
       .filter(col("pos") >= 1 && trim(col("col")) =!= "") // drop header + trailing blank
-      .withColumn("_alert", from_csv(col("col"), alertSchema,
-        Map("quote" -> "\"", "escape" -> "\"")))
-    recs.select((passThrough :+ col("_alert.*")): _*)
+      .select((passThrough :+ inline(array(from_csv(col("col"), alertSchema,
+        Map("quote" -> "\"", "escape" -> "\""))))): _*)
   }
 
   /** The error branch of the envelope decode (reference `task.ts:162-165`):
     * one row per failed agency envelope with its API error message.
     */
   def envelopeErrors(envelopes: DataFrame, rawCol: String = "raw"): DataFrame = {
-    val passThrough = envelopes.columns.filterNot(_ == rawCol).map(col).toSeq
-    envelopes
-      .withColumn("_env", from_json(unwrapJsonp(col(rawCol)), envelopeSchema))
+    val (passThrough, env) = parsedEnvelopes(envelopes, rawCol)
+    env
       .filter(col("_env.result") === "error")
       .select((passThrough :+ col("_env.message").as("error")): _*)
   }
@@ -199,14 +232,13 @@ object Active911 {
     val lonN = jsNumber(col("lon"))
     val latN = jsNumber(col("lat"))
     val needFix = lonN === 0.0 || latN === 0.0
-    val placeNums = transform(
-      split(trim(coalesce(col("place"), lit(""))), ","), p => jsNumber(p))
-    val coords = slice(placeNums, 1, 2)
-    val placeValid = size(coords) === 2 &&
-      !isnan(element_at(coords, 1)) && !isnan(element_at(coords, 2))
+    val parts = split(trim(coalesce(col("place"), lit(""))), ",")
+    val placeLat = jsNumber(get(parts, lit(0)))
+    val placeLon = jsNumber(get(parts, lit(1)))
+    val placeValid = size(parts) >= 2 && !isnan(placeLat) && !isnan(placeLon)
     alerts
-      .withColumn("f_lon", when(needFix, element_at(coords, 2)).otherwise(lonN))
-      .withColumn("f_lat", when(needFix, element_at(coords, 1)).otherwise(latN))
+      .withColumn("f_lon", when(needFix, placeLon).otherwise(lonN))
+      .withColumn("f_lat", when(needFix, placeLat).otherwise(latN))
       .filter(!needFix || placeValid)
   }
 
@@ -215,48 +247,69 @@ object Active911 {
     Seq("relation", "callsign", "remarks", "production_time")
       .map(StructField(_, StringType, nullable = true)))
 
+  private val LinePattern = Pattern.compile(ResponseRegex)
+  private val FallbackDate = Pattern.compile(FallbackDateRegex)
+  // the formatters `try_to_timestamp` and `date_format` build, under the
+  // UTC session time zone that [[isoUtc]] requires
+  private lazy val WallClock = TimestampFormatter("M/d/yyyy H:mm:ss",
+    ZoneOffset.UTC, SIMPLE_DATE_FORMAT, isParsing = true)
+  private lazy val IsoClock = TimestampFormatter("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'",
+    ZoneOffset.UTC, SIMPLE_DATE_FORMAT, isParsing = false)
+
+  /** Spark's `trim`: ASCII spaces only, unlike `String.trim`. */
+  private def sparkTrim(s: String): String = UTF8String.fromString(s).trim().toString
+
+  /** `isoUtc(parseTime(lit(t)))` on a driver- or task-side string, step
+    * for step: the same split, zone table, fallback pattern and Spark
+    * formatters, and `to_utc_timestamp`'s own shift.
+    */
+  private def isoTime(raw: String): String = {
+    def wall(s: String): Option[Long] =
+      try Some(WallClock.parse(s))
+      catch { case _: DateTimeException | _: ParseException => None }
+    val t = sparkTrim(raw)
+    val parts = t.split(" ", -1)
+    val micros = TimezoneMappings.get(parts.last) match {
+      case Some(zone) => wall(parts.init.mkString(" ")).map(DateTimeUtils.toUTCTime(_, zone))
+      case None =>
+        val m = FallbackDate.matcher(t)
+        wall(if (m.find()) m.group(1) else "")
+    }
+    micros.map(IsoClock.format).orNull
+  }
+
+  private val linksOf: UDF1[String, Seq[Row]] = responses => {
+    val byCallsign = new java.util.LinkedHashMap[String, Row]()
+    for (line <- Option(responses).getOrElse("").split("\n", -1)
+         if line.startsWith("Got a response of ")) {
+      val m = LinePattern.matcher(line)
+      val link =
+        if (m.find()) Row("t-s", sparkTrim(m.group(2)), sparkTrim(m.group(1)),
+          isoTime(m.group(4)))
+        else Row("t-s", "Unknown", "Unknown", null)
+      byCallsign.put(link.getString(1), link)
+    }
+    byCallsign.values.asScala.toSeq
+  }
+
+  private val LinksUdf =
+    udf(linksOf, ArrayType(Link, containsNull = false)).asNonNullable()
+
   /** Responder links from the embedded free-text log (reference
     * `task.ts:187-209`): split on newlines, keep `"Got a response of "`
-    * lines, regex-extract (unmatched → 'Unknown'), then dedup per
+    * lines, regex-match each once (unmatched → 'Unknown'), then dedup per
     * callsign with JS-Map semantics — LAST occurrence wins the value,
-    * FIRST occurrence fixes the output position. All in-row (no shuffle).
+    * FIRST occurrence fixes the output position (exactly what
+    * `LinkedHashMap.put` does). All in-row (no shuffle); `null` → `[]`.
     *
-    * Each line is regex-matched once (3 extracts: response, name, time;
-    * the pattern's `(.+?)` needs a character, so an empty name means no
-    * match) and the dedup is one `aggregate` fold that replaces a held
-    * callsign's slot in place or appends a new one. In Spark 4.1 array
-    * higher-order functions are interpreted, with no subexpression
-    * elimination inside a lambda, so an array referenced inside a lambda
-    * is recomputed for every element. Each stage here therefore reads the
-    * previous one only as its argument, never from inside its lambda.
+    * One row-at-a-time function, not array higher-order functions: those
+    * are `CodegenFallback` in Spark 4.1 and would knock the whole
+    * projection out of whole-stage codegen, while a `ScalaUDF` compiles
+    * into the stage. Trim and `production_time` follow the Catalyst
+    * expressions they replace (`trim`, `isoUtc(parseTime(_))`), through
+    * Spark's own formatters; PropertySpec cross-checks the two time paths.
     */
-  def responseLinks(responses: Column): Column = {
-    val lines = filter(split(coalesce(responses, lit("")), "\n"),
-      l => l.startsWith("Got a response of "))
-    val groups = transform(lines, l => struct(
-      regexp_extract(l, ResponseRegex, 1).as("response"),
-      regexp_extract(l, ResponseRegex, 2).as("name"),
-      regexp_extract(l, ResponseRegex, 4).as("time")))
-    val links = transform(groups, g => {
-      val matched = g.getField("name") =!= ""
-      struct(
-        lit("t-s").as("relation"),
-        when(matched, trim(g.getField("name")))
-          .otherwise("Unknown").as("callsign"),
-        when(matched, trim(g.getField("response")))
-          .otherwise("Unknown").as("remarks"),
-        when(matched, isoUtc(parseTime(trim(g.getField("time")))))
-          .as("production_time"))
-    })
-    val noLinks = array().cast(ArrayType(Link, containsNull = false))
-    // the fold's result is nullable; the coalesce keeps `links` non-null
-    coalesce(aggregate(links, noLinks, (acc, e) => {
-      val sameCallsign = (a: Column) => a.getField("callsign") === e.getField("callsign")
-      when(exists(acc, sameCallsign),
-        transform(acc, a => when(sameCallsign(a), e).otherwise(a)))
-        .otherwise(concat(acc, array(e)))
-    }), noLinks)
-  }
+  def responseLinks(responses: Column): Column = LinksUdf(responses)
 
   private val Ind32 = " " * 32
   private val Ind28 = " " * 28

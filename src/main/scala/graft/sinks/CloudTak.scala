@@ -2,6 +2,8 @@ package graft.sinks
 
 import org.apache.spark.sql.DataFrame
 
+import graft.Graft
+
 /** The submit sink (reference `submit(fc)`, task.ts:238; behavior from
   * `@tak-ps/etl`): POST the FeatureCollection, THEN fail the run if any
   * errors accumulated — delivery of good data strictly precedes the
@@ -53,7 +55,7 @@ class CloudTakSink(post: String => Unit, maxFeaturesPerPost: Int = 10000)
   def submit(features: DataFrame, errors: Seq[String]): Unit = {
     postChunked(features)
     if (errors.nonEmpty) {
-      val body = errors.map(m => "\"" + jsonEscape(m) + "\"")
+      val body = errors.map(m => "\"" + Graft.jsonEscape(m) + "\"")
         .mkString("[", ",", "]")
       throw new RuntimeException(body)
     }
@@ -66,22 +68,4 @@ class CloudTakSink(post: String => Unit, maxFeaturesPerPost: Int = 10000)
     */
   def foreachBatchSink: (DataFrame, Long) => Unit =
     (df, _) => postChunked(df)
-
-  /** Full JSON string escaping (reference uses `JSON.stringify`,
-    * task.ts:241): quote, backslash, and all control chars — a newline
-    * in an upstream error message must not produce an invalid body.
-    */
-  private def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '"'  => sb.append("\\\"")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, RegExpExtract}
+import org.apache.spark.sql.catalyst.expressions.{CsvToStructs, Expression, HigherOrderFunction, JsonToStructs}
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Active911, Fixtures}
@@ -112,18 +113,31 @@ class Active911Spec extends SparkSpec {
     assert(unknown.getString(2) == "Unknown" && unknown.getString(3) == null)
   }
 
-  test("links: each responder line is regex-matched once per row") {
-    // array higher-order functions run interpreted, so an array read
-    // inside a lambda is rebuilt for every element; the dedup must fold
-    // over entries built once, not filter them once per key
-    val plan = Seq("x").toDF("r")
-      .select(Active911.responseLinks(col("r"))).queryExecution.analyzed
+  test("pipeline: one codegen stage, each envelope and CSV record parsed once") {
+    // an array lambda drops its whole Filter or Project out of whole-stage
+    // codegen (each task then regenerates its code), and a parse under a
+    // pushed filter is pasted into the predicate once per column read
+    val plan = Active911.pipeline(Fixtures.envelopes.toDF("agency_id", "raw"))
+      .queryExecution.executedPlan
     def count(pf: PartialFunction[Expression, Expression]): Int =
-      plan.expressions.map(_.collect(pf).size).sum
-    // 3 capture groups per line, plus parseTime's own fallback extract
-    assert(count { case e: RegExpExtract => e } <= 4)
-    // the one filter keeps the "Got a response of " lines
-    assert(count { case e: ArrayFilter => e } == 1)
+      plan.collect { case p => p.expressions.map(_.collect(pf).size).sum }.sum
+    assert(count { case e: CsvToStructs => e } == 1)
+    assert(count { case e: JsonToStructs => e } == 1)
+    assert(count { case e: HigherOrderFunction => e } == 0)
+    // every operator from the CSV parse up to the Feature projection (the
+    // coordinate filter, f_lon and properties) runs in one codegen stage
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other => other +: other.children.flatMap(inStage)
+    }
+    val stages = plan.collect { case w: WholeStageCodegenExec => inStage(w.child) }
+    val csvParse = plan.find(_.expressions.exists(_.exists(_.isInstanceOf[CsvToStructs]))).get
+    val path = plan.collect {
+      case p if !p.isInstanceOf[WholeStageCodegenExec] && p.find(_ eq csvParse).isDefined => p
+    }
+    assert(path.exists(_.output.exists(_.name == "properties")))
+    assert(stages.exists(stage => path.forall(op => stage.exists(_ eq op))),
+      s"the Feature lineage is split across codegen stages or falls back:\n$plan")
   }
 
   test("remarks: byte-exact template whitespace (task.ts:221-225)") {

@@ -185,6 +185,46 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // --- F6 × A1: the links' time path agrees with parseTime ------------
+
+  test("responseLinks: production_time equals isoUtc(parseTime(_)) of the same text") {
+    // the links compute production_time row-at-a-time, parseTime in
+    // Catalyst; both must give the same instant (or null) for any text.
+    // No '.' in the text: the line pattern ends the time at the first '.'
+    val pad = Gen.oneOf("", " ", "  ")
+    val wallGen = for {
+      mo <- Gen.choose(1, 12); da <- Gen.choose(1, 31); yr <- Gen.choose(1995, 2030)
+      h <- Gen.choose(0, 23); mi <- Gen.choose(0, 59); se <- Gen.choose(0, 59)
+      padded <- Gen.oneOf(true, false)
+    } yield if (padded) f"$mo%02d/$da%02d/$yr $h%02d:$mi%02d:$se%02d"
+      else f"$mo/$da/$yr $h:$mi%02d:$se%02d"
+    // mapped (HST/HDT among them), unmapped, and no abbreviation
+    val clocks = Active911.TimezoneMappings.keys.toSeq ++ Seq("CEST", "XST", "BST", "")
+    val zonedGen = for {
+      wall <- wallGen; abbr <- Gen.oneOf(clocks)
+      lead <- pad; gap <- Gen.frequency(3 -> " ", 1 -> "  "); tail <- pad
+    } yield lead + wall + (if (abbr.isEmpty) "" else gap + abbr) + tail
+    val isoGen = for {
+      yr <- Gen.choose(1995, 2030); mo <- Gen.choose(1, 12); da <- Gen.choose(1, 28)
+      h <- Gen.choose(0, 23); mi <- Gen.choose(0, 59); suffix <- Gen.oneOf("", "Z", "+02:00")
+    } yield f"$yr-$mo%02d-$da%02dT$h%02d:$mi%02d:00$suffix"
+    val garbageGen = Gen.listOfN(12,
+      Gen.frequency(4 -> Gen.alphaNumChar, 1 -> Gen.oneOf('/', ':', ' '))).map(_.mkString)
+    val cases = sample(Gen.frequency(6 -> zonedGen, 1 -> isoGen, 1 -> garbageGen), 300, 43L)
+    val got = cases.zipWithIndex
+      .map { case (t, i) => (i.toLong, t, s"Got a response of R to N(1) at $t.") }
+      .toDF("case_id", "t", "line")
+      .select(col("case_id"), col("t"),
+        Active911.responseLinks(col("line"))(0)("production_time").as("link"),
+        Active911.isoUtc(Active911.parseTime(col("t"))).as("catalyst"))
+      .collect()
+    got.foreach { r =>
+      assert(r.getString(2) == r.getString(3), s"case ${r.getLong(0)}: '${r.getString(1)}'")
+    }
+    // not vacuous: a third of the cases or more parse
+    assert(got.count(!_.isNullAt(3)) > cases.size / 3)
+  }
+
   // --- EXT: int8 quantization invariants over random float vectors ------
 
   test("quantizeInt8: codes bounded by ±127, reconstruction within scale/2, round-trip stable") {
