@@ -30,8 +30,9 @@ object Bench {
     "q341_stream_ivm", "q345_state_changelog_cdc",
     "q359_stream_extrema_ivm")
 
-  /** `Class: message` of a failed run, for the bench JSON's "errors". */
-  private def describe(e: Throwable): String =
+  /** `Class: message` of a failed run, for the bench JSON's "errors" and
+    * Verify's failure lines. */
+  private[graft] def describe(e: Throwable): String =
     s"${e.getClass.getName}: ${e.getMessage}"
 
   private[graft] def median3(ts: Seq[Double]): Double =

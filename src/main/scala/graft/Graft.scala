@@ -11,16 +11,21 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 object Graft {
 
   /** Session tuned for the harness: local mode, UTC, shuffle partitions
-    * sized to cores (not the 200 default), AQE on. ANSI off so string→number
+    * sized to the master's task slots (not the 200 default) — N for
+    * `local[N]`, every core otherwise — so no reduce task waits for a
+    * slot; AQE on. ANSI off so string→number
     * coercion yields NULL (JS-like lenient semantics of the reference,
     * task.ts:172 `Number(...)`) instead of throwing.
     */
   def session(master: String = s"local[${Runtime.getRuntime.availableProcessors}]"): SparkSession = {
-    val cpus = Runtime.getRuntime.availableProcessors
+    val cpus = master match {
+      case LocalThreads(n) => n
+      case _ => Runtime.getRuntime.availableProcessors.toString
+    }
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.ansi.enabled", "false")
@@ -35,6 +40,8 @@ object Graft {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  private val LocalThreads = """local\[(\d+)\]""".r
 
   /** [[session]] for the command-line drivers (Bench, Verify, PlanDump):
     * `local[SPARK_GRAFT_CPUS]` (default: every core) with shuffle
@@ -97,7 +104,8 @@ object Graft {
       .digest(s.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
 
   /** Full JSON string escaping (the sink's error report, reference
-    * `JSON.stringify`, task.ts:241; Bench's "errors"): quote, backslash,
+    * `JSON.stringify`, task.ts:241; Bench's "errors"; Verify's
+    * `oracle_sql.json`): quote, backslash,
     * and all control chars — a newline in a message must not produce
     * invalid JSON.
     */

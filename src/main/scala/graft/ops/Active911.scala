@@ -1,5 +1,6 @@
 package graft.ops
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.text.ParseException
 import java.time.{DateTimeException, ZoneOffset}
 import java.util.regex.Pattern
@@ -7,8 +8,8 @@ import java.util.regex.Pattern
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.api.java.UDF1
-import org.apache.spark.sql.catalyst.util.{DateTimeUtils, TimestampFormatter}
+import org.apache.spark.sql.api.java.{UDF1, UDF3}
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, NumberConverter, TimestampFormatter}
 import org.apache.spark.sql.catalyst.util.LegacyDateFormats.SIMPLE_DATE_FORMAT
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -35,6 +36,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *    projection by pasting the parse into the predicate once per column
   *    read, but it cannot push a predicate on generated columns below the
   *    `Generate`.
+  *  - Each per-row scalar (JS `Number()`, the coordinate fix, the time
+  *    parse, the responder links) is ONE row-at-a-time function, not a
+  *    tree of Catalyst expressions. A stream re-optimizes its plan and
+  *    regenerates the stage's Java source on every trigger, and a batch
+  *    on every cycle, so plan size is a fixed cost per trigger: written
+  *    as expressions, the optimizer inlines the JS `Number()` `CASE` ~14
+  *    times and the plan holds ~1,600 expression nodes. A `ScalaUDF`
+  *    compiles into the stage like any expression, and the tests keep the
+  *    replaced expressions as the models the functions must equal.
   *  - The responder dedup (reference `task.ts:187-209`, a JS `Map` with
   *    last-writer-wins values but first-insertion iteration order) is done
   *    *inside the row*, not a groupBy+window — the 1:N explode/re-group
@@ -84,34 +94,53 @@ object Active911 {
     */
   val ResponseRegex = "Got a response of (.+?) to (.+?)\\((\\d+)\\) at (.+?)\\."
 
-  private val NumberRegex = "^[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?$"
-
-  /** JS `Number(x)` semantics on a string column (reference `task.ts:172,
-    * 176, 229`): whitespace-trimmed; empty → 0 (the JS `Number('') === 0`
-    * quirk, SURVEY.md §7.5#4); `±Infinity` (exact case, sign allowed) →
-    * ±∞; unsigned `0x`/`0b`/`0o` radix literals → their value (signs make
-    * them NaN in JS, and do here); non-numeric → NaN (never null).
-    * ANSI-safe: every cast runs behind a shape guard. Radix values are
-    * exact to 2⁶³ (`conv`'s unsigned-long window) — beyond JS's own 2⁵³
-    * double-exact range, so any divergence needs a >19-digit hex literal
-    * in a coordinate field.
+  /** Spark's `trim` of `coalesce(s, '')`: ASCII spaces only, unlike
+    * `String.trim`.
     */
-  def jsNumber(c: Column): Column = {
-    val t = trim(coalesce(c, lit("")))
-    def radix(prefix: String, digits: String, base: Int) =
-      t.rlike(s"^0[$prefix][$digits]+$$") ->
-        conv(substring(t, 3, 1000000), base, 10).cast(DoubleType)
-    val (isHex, hexVal) = radix("xX", "0-9a-fA-F", 16)
-    val (isBin, binVal) = radix("bB", "01", 2)
-    val (isOct, octVal) = radix("oO", "0-7", 8)
-    when(t === "", lit(0.0))
-      .when(t.rlike("^[+-]?Infinity$"),
-        when(t.startsWith("-"), Double.NegativeInfinity)
-          .otherwise(Double.PositiveInfinity))
-      .when(isHex, hexVal).when(isBin, binVal).when(isOct, octVal)
-      .when(t.rlike(NumberRegex), t.cast(DoubleType))
-      .otherwise(lit(Double.NaN))
+  private def sparkTrim(s: String): String =
+    UTF8String.fromString(Option(s).getOrElse("")).trim().toString
+
+  private val NumberShape =
+    Pattern.compile("^[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?$")
+  private val InfinityShape = Pattern.compile("^[+-]?Infinity$")
+  private val RadixShapes: Seq[(Pattern, Int)] =
+    Seq(("xX", "0-9a-fA-F", 16), ("bB", "01", 2), ("oO", "0-7", 8)).map {
+      case (prefix, digits, base) => Pattern.compile(s"^0[$prefix][$digits]+$$") -> base
+    }
+
+  /** JS `Number(x)` semantics on one string (reference `task.ts:172, 176,
+    * 229`): trimmed of ASCII spaces (Spark's `trim`); null or empty → 0
+    * (the JS `Number('') === 0` quirk, SURVEY.md §7.5#4); `±Infinity`
+    * (exact case, sign allowed) → ±∞; unsigned `0x`/`0b`/`0o` radix
+    * literals → their value (signs make them NaN in JS, and do here);
+    * any other numeric shape → its double; anything else → NaN.
+    *
+    * Step for step the Catalyst expression this replaced (kept in the
+    * tests as the model): the same patterns, matched with `find` as
+    * `rlike` does (so `$` also matches before one final line terminator),
+    * radix digits through `conv`'s own converter (its unsigned 64-bit
+    * window: 2⁶⁴ and beyond read as 2⁶⁴−1), and the string-to-double
+    * cast's `parseDouble`, which yields null (not NaN) for a numeric shape
+    * ending in a line terminator it does not trim, such as U+2028. ANSI
+    * mode does not change the result.
+    */
+  def jsNumber(raw: String): java.lang.Double = {
+    val t = sparkTrim(raw)
+    def is(p: Pattern) = p.matcher(t).find()
+    lazy val radix = RadixShapes.collectFirst { case (p, base) if is(p) => base }
+    if (t.isEmpty) 0.0
+    else if (is(InfinityShape)) {
+      if (t.startsWith("-")) Double.NegativeInfinity else Double.PositiveInfinity
+    } else if (radix.isDefined) NumberConverter.convert(
+      t.substring(2).getBytes(UTF_8), radix.get, 10, false, null).toString.toDouble
+    else if (!is(NumberShape)) Double.NaN
+    else try t.toDouble catch { case _: NumberFormatException => null }
   }
+
+  private val JsNumberUdf = udf((s: String) => jsNumber(s))
+
+  /** [[jsNumber]] on a string column. */
+  def jsNumber(c: Column): Column = JsNumberUdf(c)
 
   /** Strip a JSONP wrapper: drop everything up to the first '(' and a
     * trailing ')' (reference `task.ts:156-160`).
@@ -142,19 +171,45 @@ object Active911 {
     * null for anything else. Identical on every shape the Active911
     * export emits; divergent only where the reference's answer is
     * wrong anyway.
+    *
+    * Row-at-a-time ([[parseMicros]]), the one time path shared with the
+    * Feature `start` and the links' `production_time`.
     */
-  def parseTime(c: Column): Column = {
-    val t = trim(coalesce(c, lit("")))
-    val parts = split(t, " ")
-    val abbr = element_at(parts, -1)
-    val zone = element_at(typedlit(TimezoneMappings), abbr)
-    val datePart = array_join(slice(parts, lit(1), size(parts) - 1), " ")
-    val mapped = to_utc_timestamp(
-      try_to_timestamp(datePart, lit("M/d/yyyy H:mm:ss")), zone)
-    val fallbackDate = regexp_extract(t, FallbackDateRegex, 1)
-    val fallback = try_to_timestamp(fallbackDate, lit("M/d/yyyy H:mm:ss"))
-    when(zone.isNotNull, mapped).otherwise(fallback)
+  def parseTime(c: Column): Column = timestamp_micros(MicrosUdf(c))
+
+  private val FallbackDate = Pattern.compile(FallbackDateRegex)
+  // the formatters `try_to_timestamp` and `date_format` build, under the
+  // UTC session time zone that [[isoUtc]] requires
+  private lazy val WallClock = TimestampFormatter("M/d/yyyy H:mm:ss",
+    ZoneOffset.UTC, SIMPLE_DATE_FORMAT, isParsing = true)
+  private lazy val IsoClock = TimestampFormatter("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'",
+    ZoneOffset.UTC, SIMPLE_DATE_FORMAT, isParsing = false)
+
+
+  /** [[parseTime]] of one string as epoch microseconds, step for step the
+    * Catalyst expression it replaced (kept in the tests as the model):
+    * the same split on spaces, zone table and fallback pattern, Spark's
+    * own `try_to_timestamp` formatter and `to_utc_timestamp`'s shift.
+    */
+  private def parseMicros(raw: String): Option[Long] = {
+    def wall(s: String): Option[Long] =
+      try Some(WallClock.parse(s))
+      catch { case _: DateTimeException | _: ParseException => None }
+    val t = sparkTrim(raw)
+    val parts = t.split(" ", -1)
+    TimezoneMappings.get(parts.last) match {
+      case Some(zone) => wall(parts.init.mkString(" ")).map(DateTimeUtils.toUTCTime(_, zone))
+      case None =>
+        val m = FallbackDate.matcher(t)
+        wall(if (m.find()) m.group(1) else "")
+    }
   }
+
+  /** `isoUtc(parseTime(_))` of one string. */
+  private def isoTime(raw: String): String = parseMicros(raw).map(IsoClock.format).orNull
+
+  private val MicrosUdf = udf((s: String) => parseMicros(s).map(Long.box).orNull)
+  private val IsoTimeUdf = udf((s: String) => isoTime(s))
 
   /** ISO-8601 with milliseconds, as moment's `toISOString()` emits
     * (reference `task.ts:72,75`). Requires UTC session timezone.
@@ -197,8 +252,8 @@ object Active911 {
     *
     * The CSV parse is a generator (`inline` of a one-element array), so
     * each record is parsed once: were it a projection, the optimizer
-    * would push the coordinate filter of [[fixCoordinates]] below it and
-    * paste a pruned `from_csv` into the predicate for every column read.
+    * would push any filter on alert columns below it and paste a pruned
+    * `from_csv` into the predicate for every column read.
     */
   def alertsFromEnvelopes(envelopes: DataFrame, rawCol: String = "raw"): DataFrame = {
     val (passThrough, env) = parsedEnvelopes(envelopes, rawCol)
@@ -221,26 +276,50 @@ object Active911 {
       .select((passThrough :+ col("_env.message").as("error")): _*)
   }
 
+  /** The coordinates a kept alert gets, the element type of [[fixOf]]. */
+  private val Fixed: StructType = StructType(
+    Seq("f_lon", "f_lat").map(StructField(_, DoubleType, nullable = true)))
+
+  /** `[]` to drop the alert, or its one `(f_lon, f_lat)`. A [[jsNumber]]
+    * can be null (see there), so `needFix` is SQL's three-valued
+    * `lon = 0 OR lat = 0`: unknown keeps the direct coordinates when
+    * `place` is valid, and drops the row otherwise, as the filter did.
+    */
+  private val fixOf: UDF3[String, String, String, Seq[Row]] = (lon, lat, place) => {
+    val (lonN, latN) = (jsNumber(lon), jsNumber(lat))
+    val zero = Seq(lonN, latN).map(d => Option(d).map(_.doubleValue == 0.0))
+    val needFix =
+      if (zero.contains(Some(true))) Some(true) else if (zero.contains(None)) None else Some(false)
+    lazy val fromPlace = {
+      val parts = sparkTrim(place).split(",", -1)
+      val placeLat = jsNumber(parts(0))
+      val placeLon = jsNumber(if (parts.length > 1) parts(1) else null)
+      val ok = parts.length >= 2 && Seq(placeLat, placeLon).forall(d => d == null || !d.isNaN)
+      Option.when(ok)(Row(placeLon, placeLat))
+    }
+    needFix match {
+      case Some(false) => Seq(Row(lonN, latN))
+      case Some(true) => fromPlace.toSeq
+      case None => fromPlace.map(_ => Row(lonN, latN)).toSeq
+    }
+  }
+
+  private val FixUdf =
+    udf(fixOf, ArrayType(Fixed, containsNull = false)).asNonNullable()
+
   /** Coordinate fix/filter (reference `task.ts:172-185`): if either
     * coordinate is JS-zero (including the empty-string→0 quirk), fall
     * back to parsing `place` as "lat,lon[,...]" (note lat-first; slice to
     * 2); if that fails, DROP the row silently (`continue`, `task.ts:183` —
     * the silent counterpart of the loud error channel, SURVEY.md §2.12 E2).
     * Adds `f_lon`/`f_lat` double columns for the geometry.
+    *
+    * One generator over one row function: the filter and the values come
+    * from one evaluation, so the optimizer has no predicate to push below
+    * the decode and no expression to paste into several projections.
     */
-  def fixCoordinates(alerts: DataFrame): DataFrame = {
-    val lonN = jsNumber(col("lon"))
-    val latN = jsNumber(col("lat"))
-    val needFix = lonN === 0.0 || latN === 0.0
-    val parts = split(trim(coalesce(col("place"), lit(""))), ",")
-    val placeLat = jsNumber(get(parts, lit(0)))
-    val placeLon = jsNumber(get(parts, lit(1)))
-    val placeValid = size(parts) >= 2 && !isnan(placeLat) && !isnan(placeLon)
-    alerts
-      .withColumn("f_lon", when(needFix, placeLon).otherwise(lonN))
-      .withColumn("f_lat", when(needFix, placeLat).otherwise(latN))
-      .filter(!needFix || placeValid)
-  }
+  def fixCoordinates(alerts: DataFrame): DataFrame =
+    alerts.select(col("*"), inline(FixUdf(col("lon"), col("lat"), col("place"))))
 
   /** One responder link, the element type of [[responseLinks]]. */
   private val Link: StructType = StructType(
@@ -248,36 +327,6 @@ object Active911 {
       .map(StructField(_, StringType, nullable = true)))
 
   private val LinePattern = Pattern.compile(ResponseRegex)
-  private val FallbackDate = Pattern.compile(FallbackDateRegex)
-  // the formatters `try_to_timestamp` and `date_format` build, under the
-  // UTC session time zone that [[isoUtc]] requires
-  private lazy val WallClock = TimestampFormatter("M/d/yyyy H:mm:ss",
-    ZoneOffset.UTC, SIMPLE_DATE_FORMAT, isParsing = true)
-  private lazy val IsoClock = TimestampFormatter("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'",
-    ZoneOffset.UTC, SIMPLE_DATE_FORMAT, isParsing = false)
-
-  /** Spark's `trim`: ASCII spaces only, unlike `String.trim`. */
-  private def sparkTrim(s: String): String = UTF8String.fromString(s).trim().toString
-
-  /** `isoUtc(parseTime(lit(t)))` on a driver- or task-side string, step
-    * for step: the same split, zone table, fallback pattern and Spark
-    * formatters, and `to_utc_timestamp`'s own shift.
-    */
-  private def isoTime(raw: String): String = {
-    def wall(s: String): Option[Long] =
-      try Some(WallClock.parse(s))
-      catch { case _: DateTimeException | _: ParseException => None }
-    val t = sparkTrim(raw)
-    val parts = t.split(" ", -1)
-    val micros = TimezoneMappings.get(parts.last) match {
-      case Some(zone) => wall(parts.init.mkString(" ")).map(DateTimeUtils.toUTCTime(_, zone))
-      case None =>
-        val m = FallbackDate.matcher(t)
-        wall(if (m.find()) m.group(1) else "")
-    }
-    micros.map(IsoClock.format).orNull
-  }
-
   private val linksOf: UDF1[String, Seq[Row]] = responses => {
     val byCallsign = new java.util.LinkedHashMap[String, Row]()
     for (line <- Option(responses).getOrElse("").split("\n", -1)
@@ -305,9 +354,8 @@ object Active911 {
     * One row-at-a-time function, not array higher-order functions: those
     * are `CodegenFallback` in Spark 4.1 and would knock the whole
     * projection out of whole-stage codegen, while a `ScalaUDF` compiles
-    * into the stage. Trim and `production_time` follow the Catalyst
-    * expressions they replace (`trim`, `isoUtc(parseTime(_))`), through
-    * Spark's own formatters; PropertySpec cross-checks the two time paths.
+    * into the stage. Trim follows Spark's `trim`, and `production_time`
+    * is the same function as the Feature `start`: `isoUtc(parseTime(_))`.
     */
   def responseLinks(responses: Column): Column = LinksUdf(responses)
 
@@ -325,7 +373,7 @@ object Active911 {
       lit("Feature").as("type"),
       struct(
         coalesce(col("description"), lit("")).as("callsign"),
-        isoUtc(parseTime(col("sent"))).as("start"),
+        IsoTimeUdf(col("sent")).as("start"),
         responseLinks(col("responses")).as("links"),
         concat(
           lit("\n" + Ind32 + "Groups: "), coalesce(col("units"), lit("")),

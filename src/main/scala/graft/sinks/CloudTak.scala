@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 
 import graft.Graft
 
@@ -11,41 +12,43 @@ import graft.Graft
   *
   * The transport is an injected function (zero-egress harness). The
   * reference materializes one in-memory FeatureCollection (task.ts:116-119)
-  * — fine for one agency batch, a driver OOM at corpus scale. Here the
-  * batch path streams partitions to the driver one at a time
-  * (`toLocalIterator` — driver holds ONE partition, never the corpus)
-  * and posts size-capped collections of at most [[maxFeaturesPerPost]]
-  * features; the downstream CoT upsert is idempotent by feature id, so
+  * — fine for one agency batch, a driver OOM at corpus scale. Here each
+  * batch or micro-batch is ONE Spark job: each task streams its partition
+  * through [[CloudTakDataWriter]] and posts every full collection of
+  * [[maxFeaturesPerPost]] features itself, so memory is O(chunk) per
+  * task; it returns only its last, partial chunk. The driver packs those
+  * tails into collections of at most the cap and posts them, so a result
+  * of n features still takes ceil(n / cap) POSTs, as one driver-side
+  * chunker would send, and the driver holds fewer than the cap features
+  * per task. The downstream CoT upsert is idempotent by feature id, so
   * splitting one logical collection into several POSTs is
   * semantics-preserving.
+  *
+  * Delivery is AT-LEAST-ONCE, as in [[CloudTakDataSource]]: a retried
+  * task posts its full chunks again. The transport must therefore be
+  * Serializable (it ships inside the job's closure) and safe to call
+  * from several tasks at once.
   */
 class CloudTakSink(post: String => Unit, maxFeaturesPerPost: Int = 10000)
     extends Serializable {
 
-  /** Wrap already-serialized feature rows into a FeatureCollection JSON
-    * document (reference `task.ts:116-119`). Null struct fields are
-    * omitted upstream by `toJSON`, matching the JS `undefined`
-    * serialization of absent `production_time`. Bounded input only —
-    * callers chunk to [[maxFeaturesPerPost]].
-    */
-  def toFeatureCollection(featureJson: Seq[String]): String =
-    featureJson.mkString(
-      """{"type":"FeatureCollection","features":[""", ",", "]}")
-
-  /** Stream the features to the transport as size-capped collections.
-    * `toLocalIterator` fetches one partition at a time, so driver memory
-    * is O(partition), not O(result); an empty result still posts one
-    * empty collection (the reference always submits what it has).
+  /** One job: each task posts its partition's full chunks and returns the
+    * partial one; the driver posts the tails, packed to the cap. An empty
+    * result still posts one empty collection (the reference always
+    * submits what it has).
     */
   private def postChunked(features: DataFrame): Unit = {
-    import scala.jdk.CollectionConverters._
-    val rows = features.toJSON.toLocalIterator().asScala
-    var any = false
-    rows.grouped(maxFeaturesPerPost).foreach { chunk =>
-      post(toFeatureCollection(chunk))
-      any = true
-    }
-    if (!any) post(toFeatureCollection(Nil))
+    val (send, cap) = (post, maxFeaturesPerPost)
+    val rows = features.toJSON.queryExecution.toRdd
+    val parts = rows.sparkContext.runJob(rows, (part: Iterator[InternalRow]) => {
+      val writer = new CloudTakDataWriter(send, cap)
+      part.foreach(writer.write)
+      writer.partialChunk()
+    })
+    val tails = parts.toSeq.flatMap(_._2).grouped(cap).toSeq
+    tails.foreach(chunk => send(CloudTakDataSource.toFeatureCollection(chunk)))
+    if (tails.isEmpty && parts.forall(_._1 == 0))
+      send(CloudTakDataSource.toFeatureCollection(Nil))
   }
 
   /** Submit-then-fail: the reference always delivers what it has, and
@@ -63,8 +66,8 @@ class CloudTakSink(post: String => Unit, maxFeaturesPerPost: Int = 10000)
 
   /** Streaming form: per-micro-batch FeatureCollection POSTs (idempotent
     * downstream by feature id — the CoT upsert absorbs at-least-once
-    * redelivery, SURVEY.md T5). Each micro-batch is itself chunked, so a
-    * catch-up batch after downtime cannot blow the driver either.
+    * redelivery, SURVEY.md T5). Each micro-batch is one job, chunked per
+    * task, so a catch-up batch after downtime cannot blow the driver.
     */
   def foreachBatchSink: (DataFrame, Long) => Unit =
     (df, _) => postChunked(df)

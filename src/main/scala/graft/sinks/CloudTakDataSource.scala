@@ -10,10 +10,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSourceV2 WRITE side of the CloudTak submit sink — the
-  * distributed counterpart of [[CloudTakSink]] (reference `submit(fc)`,
+  * `DataFrameWriter` form of [[CloudTakSink]] (reference `submit(fc)`,
   * task.ts:238): feature rows POST from the EXECUTORS, each task
-  * streaming its partition as size-capped FeatureCollections, instead
-  * of funnelling the corpus through the driver's `toLocalIterator`.
+  * streaming its partition as size-capped FeatureCollections through
+  * [[CloudTakDataWriter]], the chunker both sinks share.
   * This is the shape an HTTP sink needs at fleet scale — N tasks post N
   * chunk streams in parallel; the driver only coordinates commit.
   *
@@ -52,7 +52,12 @@ object CloudTakDataSource {
   val SCHEMA: StructType = StructType(Seq(
     StructField("feature", StringType, nullable = false)))
 
-  /** Same wire shape as [[CloudTakSink.toFeatureCollection]]. */
+  /** Wrap already-serialized feature rows into a FeatureCollection JSON
+    * document (reference `task.ts:116-119`). Null struct fields are
+    * omitted upstream by `toJSON`/`to_json`, matching the JS `undefined`
+    * serialization of absent `production_time`. Bounded input only —
+    * callers chunk to the per-POST cap.
+    */
   def toFeatureCollection(featureJson: Seq[String]): String =
     featureJson.mkString(
       """{"type":"FeatureCollection","features":[""", ",", "]}")
@@ -109,8 +114,9 @@ case class CloudTakCommit(nFeatures: Long, nPosts: Long)
     extends WriterCommitMessage
 
 /** Buffers up to `maxPer` serialized features, POSTing a
-  * FeatureCollection per full chunk; `commit()` flushes the remainder.
-  * Memory is O(maxPer), independent of partition size.
+  * FeatureCollection per full chunk; `commit()` flushes the remainder,
+  * [[partialChunk]] hands it back unposted. Memory is O(maxPer),
+  * independent of partition size.
   */
 class CloudTakDataWriter(post: String => Unit, maxPer: Int)
     extends DataWriter[InternalRow] {
@@ -135,6 +141,16 @@ class CloudTakDataWriter(post: String => Unit, maxPer: Int)
   override def commit(): WriterCommitMessage = {
     flush()
     CloudTakCommit(nFeatures, nPosts)
+  }
+
+  /** End the partition without posting its last, partial chunk: the
+    * number of full chunks posted, and the fewer than `maxPer` features
+    * left over.
+    */
+  def partialChunk(): (Long, Seq[String]) = {
+    val rest = buf.toVector
+    buf.clear()
+    (nPosts, rest)
   }
 
   override def abort(): Unit = buf.clear() // posted chunks stay (see provider note)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.expressions.{CsvToStructs, Expression, HigherOrderFunction, JsonToStructs}
+import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Conv, CsvToStructs, Expression, HigherOrderFunction, JsonToStructs, RLike}
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 
@@ -138,6 +138,21 @@ class Active911Spec extends SparkSpec {
     assert(path.exists(_.output.exists(_.name == "properties")))
     assert(stages.exists(stage => path.forall(op => stage.exists(_ eq op))),
       s"the Feature lineage is split across codegen stages or falls back:\n$plan")
+  }
+
+  test("pipeline: compact plan, each per-row scalar one row function") {
+    // a stream re-optimizes and regenerates the stage's source on every
+    // trigger, so plan size is paid per trigger: the JS Number() CASE
+    // inlined into the coordinate fix made ~1,600 expression nodes
+    val plan = Active911.pipeline(Fixtures.envelopes.toDF("agency_id", "raw"))
+      .queryExecution.executedPlan
+    def count(pf: PartialFunction[Expression, Expression]): Int =
+      plan.collect { case p => p.expressions.map(_.collect(pf).size).sum }.sum
+    assert(count { case e: RLike => e } == 0)
+    assert(count { case e: CaseWhen => e } == 0)
+    assert(count { case e: Conv => e } == 0)
+    val nodes = count { case e => e }
+    assert(nodes <= 200, s"$nodes expression nodes in:\n$plan")
   }
 
   test("remarks: byte-exact template whitespace (task.ts:221-225)") {

@@ -69,10 +69,10 @@ class ConnectorSpec extends SparkSpec {
     val apiErrs = Active911.envelopeErrors(envelopes)
       .collect().map(_.getAs[String]("error")).toSeq
 
-    var posted: Option[String] = None
-    val sink = new CloudTakSink(body => posted = Some(body))
+    val sink = new CloudTakSink(CloudTakPostCollector.fresh())
     val errs = fetchErrs ++ apiErrs
     val thrown = intercept[RuntimeException](sink.submit(features, errs))
+    val posted: Option[String] = CloudTakPostCollector.bodies.lastOption
     // delivery happened BEFORE the failure signal
     assert(posted.isDefined)
     val body = posted.get
@@ -88,9 +88,9 @@ class ConnectorSpec extends SparkSpec {
     val (envelopes, _) = c.read(spark, Active911Config("u", "p"), 1765200000000L)
     val features = Active911.pipeline(envelopes)
     val n = features.count() // 5 fixture features
-    var bodies: List[String] = Nil
-    val sink = new CloudTakSink(body => bodies ::= body, maxFeaturesPerPost = 2)
+    val sink = new CloudTakSink(CloudTakPostCollector.fresh(), maxFeaturesPerPost = 2)
     intercept[RuntimeException](sink.submit(features, Seq("boom")))
+    val bodies = CloudTakPostCollector.bodies.toList
     // ceil(5/2) = 3 capped collections, every one a valid wrapper
     assert(bodies.length == math.ceil(n / 2.0).toInt)
     assert(bodies.forall(_.startsWith("""{"type":"FeatureCollection","features":[""")))
@@ -101,7 +101,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("error body JSON-escapes control characters (task.ts:241 JSON.stringify)") {
-    val sink = new CloudTakSink(_ => ())
+    val sink = new CloudTakSink(CloudTakPostCollector.fresh())
     val msg = "line1\nline2\t\"quoted\" back\\slash " + '\u0001'
     val e = intercept[RuntimeException](
       sink.submit(spark.emptyDataFrame, Seq(msg)))
@@ -112,9 +112,72 @@ class ConnectorSpec extends SparkSpec {
   test("sink with no errors does not throw") {
     val c = new Active911Connector(new MockTransport)
     val (envelopes, _) = c.read(spark, Active911Config("u", "p"), 1765200000000L)
-    var posted = 0
-    new CloudTakSink(_ => posted += 1).submit(Active911.pipeline(envelopes), Nil)
+    new CloudTakSink(CloudTakPostCollector.fresh()).submit(Active911.pipeline(envelopes), Nil)
+    val posted = CloudTakPostCollector.bodies.size
     assert(posted == 1)
+  }
+
+  test("sink: a micro-batch posts from its tasks in one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions.{col, to_timestamp}
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[(Int, String)]
+    // the lookback dedup shuffles, so each micro-batch spans the
+    // session's shuffle partitions
+    val features = graft.streaming.Lookback.dedupById(
+      Active911.pipeline(mem.toDF().toDF("agency_id", "raw"))
+        .withColumn("ts", to_timestamp(col("properties.start"))), "id", "ts").drop("ts")
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt >= 2)
+    val sink = new CloudTakSink(CloudTakPostCollector.fresh(), maxFeaturesPerPost = 2)
+    val batchKey = "graft.test.batch"
+    val jobBatches = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(batchKey)))
+          .foreach(b => jobBatches.add(b.toLong))
+    }
+    // posts per micro-batch: everything recorded while the sink ran
+    val posts = scala.collection.concurrent.TrieMap.empty[Long, Vector[String]]
+    val checkpoint = java.nio.file.Files.createTempDirectory("graft_sink_ckpt")
+    spark.sparkContext.addSparkListener(listener)
+    val q = features.writeStream.option("checkpointLocation", checkpoint.toString)
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        val before = CloudTakPostCollector.bodies.size
+        spark.sparkContext.setLocalProperty(batchKey, id.toString)
+        try sink.foreachBatchSink(df, id)
+        finally spark.sparkContext.setLocalProperty(batchKey, null)
+        posts(id) = CloudTakPostCollector.bodies.drop(before)
+      }.start()
+    try {
+      mem.addData(Fixtures.envelopes.filter(_._1 != 103): _*) // 5 features
+      q.processAllAvailable()
+      mem.addData(Fixtures.envelopes.filter(_._1 == 103): _*) // error envelope only
+      q.processAllAvailable()
+      var (last, stableFor) = (-1, 0)
+      while (stableFor < 3) {
+        Thread.sleep(100)
+        val n = jobBatches.size
+        if (n == last) stableFor += 1 else { stableFor = 0; last = n }
+      }
+      def featuresIn(body: String) = "\"type\":\"Feature\"".r.findAllIn(body).size
+      val full = posts.filter(_._2.map(featuresIn).sum > 0)
+      assert(full.size == 1 && full.head._2.map(featuresIn).sum == 5)
+      assert(full.head._2.forall(featuresIn(_) <= 2)) // no chunk over the cap
+      assert(full.head._2.size == 3) // ceil(5 / 2): the tails are packed, not posted per task
+      val jobs = jobBatches.asScala.groupBy(identity).map { case (id, js) => id -> js.size }
+      posts.keys.foreach(id => assert(jobs.get(id).contains(1), s"batch $id ran ${jobs.get(id)} jobs"))
+      val empty = posts.filter(_._2.map(featuresIn).sum == 0)
+      assert(empty.nonEmpty)
+      empty.values.foreach(b =>
+        assert(b == Vector("""{"type":"FeatureCollection","features":[]}""")))
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(checkpoint.toFile)
+    }
   }
 
   test("DSv2 read path: one partition per agency, executor-side fetch") {
@@ -206,12 +269,22 @@ class ConnectorSpec extends SparkSpec {
   }
 }
 
-/** Process-wide post collector for the DSv2 writer specs — the lambda
-  * handed to the registry captures only this static reference, so it
-  * serializes into executor tasks and collects in one place in
-  * local mode.
+/** Process-wide post collector for the sink specs — both sinks post
+  * from tasks, and the lambda handed to them captures only this static
+  * reference, so it serializes into the tasks and collects in one place
+  * in local mode (a closure over a test-local `var` would append to a
+  * deserialized copy and leave the test's own `var` empty).
   */
 object CloudTakPostCollector {
   val posts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   def record(s: String): Unit = { posts.add(s); () }
+
+  /** Clear the collector; the transport that records into it. */
+  def fresh(): String => Unit = { posts.clear(); record }
+
+  /** Everything posted since the last clear, in arrival order. */
+  def bodies: Vector[String] = {
+    import scala.jdk.CollectionConverters._
+    posts.asScala.toVector
+  }
 }

@@ -53,6 +53,94 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // --- P1: jsNumber, the row function equals its Catalyst model ----------
+
+  /** Same double bit for bit (NaN as NaN, -0.0 apart from 0.0), or both null. */
+  private def same(a: Any, b: Any): Boolean = java.util.Objects.equals(a, b)
+
+  test("jsNumber: the row function equals the Catalyst expression on any string") {
+    // Spark's trim strips ASCII spaces only; rlike's `$` also matches
+    // before one final line terminator, and the cast's parseDouble trims
+    // tabs and newlines but not U+2028 or U+0085
+    val pad = Gen.oneOf("", "", " ", "  ", "\t", "\n", "\r\n", " \n", "\u2028", "\u0085")
+    val digits = (n: Int) => Gen.listOfN(n, Gen.numChar).map(_.mkString)
+    val decimalGen = for {
+      sign <- Gen.oneOf("", "", "+", "-"); i <- Gen.choose(0, 4).flatMap(digits)
+      dot <- Gen.oneOf("", ".", "."); f <- Gen.choose(0, 3).flatMap(digits)
+      e <- Gen.oneOf("", "", "e5", "E-3", "e+2", "e400", "e-400", "e")
+    } yield sign + i + dot + f + e
+    val fixedGen = Gen.oneOf("", "0", "-0", "+0", "1.", ".5", "+.5e-3", "1e400", "-1e400",
+      ".", "+", "-", "e5", "1..2", "1.2.3", "12,5", "0.0", "00012",
+      "Infinity", "+Infinity", "-Infinity", "infinity", "INFINITY", "InfinityX", "--Infinity",
+      "NaN", "nan", "Inf", "1d", "1f", "0x", "0b", "0o")
+    val radixGen = for {
+      sign <- Gen.oneOf("", "", "", "+", "-")
+      (p, alphabet) <- Gen.oneOf(("0x", "0123456789abcdefABCDEFgZ"), ("0X", "0123456789abcdefG"),
+        ("0b", "012"), ("0B", "01"), ("0o", "012345678"), ("0O", "01234567"))
+      n <- Gen.frequency(5 -> Gen.choose(1, 8), 2 -> Gen.choose(15, 24), 1 -> Gen.choose(60, 70))
+      ds <- Gen.listOfN(n, Gen.oneOf(alphabet.toSeq))
+    } yield sign + p + ds.mkString
+    // radix values at and beyond 2^64: conv's overflow window
+    val bigRadix = Gen.oneOf("0x" + "f" * 16, "0x1" + "0" * 16, "0x" + "f" * 17,
+      "0b1" + "0" * 64, "0b" + "1" * 64, "0o2" + "0" * 21, "0o1" + "7" * 21)
+    val garbageGen = Gen.listOfN(6, Gen.frequency(3 -> Gen.alphaNumChar,
+      2 -> Gen.oneOf('.', '+', '-', 'e', 'x', ' ', '\t', ','), 1 -> Gen.oneOf('é', '中', '٣')))
+      .map(_.mkString)
+    val coreGen = Gen.frequency(4 -> decimalGen, 3 -> fixedGen, 3 -> radixGen, 1 -> bigRadix,
+      2 -> garbageGen)
+    val caseGen = for { l <- pad; c <- coreGen; r <- pad } yield l + c + r
+    val cases = (sample(caseGen, 400, 61L) :+ null).zipWithIndex
+    val got = cases.map { case (t, i) => (i.toLong, t) }.toDF("case_id", "t")
+      .select(col("case_id"), Active911.jsNumber(col("t")).as("row"),
+        Active911Catalyst.jsNumber(col("t")).as("model"))
+      .collect()
+    got.foreach { r =>
+      val t = cases(r.getLong(0).toInt)._1
+      assert(same(r.get(1), r.get(2)), s"case ${r.getLong(0)}: '$t' → ${r.get(1)}, model ${r.get(2)}")
+      assert(same(Active911.jsNumber(t), r.get(2)), s"driver-side '$t'")
+    }
+    // not vacuous: every kind of result occurs
+    val model = got.map(r => Option(r.get(2)).map(_.asInstanceOf[Double]))
+    assert(model.contains(None))
+    assert(model.flatten.exists(_.isNaN) && model.flatten.exists(_.isInfinite))
+    assert(model.flatten.count(d => d == 0.0) > 5)
+    assert(model.flatten.count(d => !d.isNaN && !d.isInfinite && d != 0.0) > 30)
+    assert(model.flatten.count(_ >= math.pow(2, 63)) >= 3)
+  }
+
+  test("fixCoordinates: the row function keeps, drops and places like the Catalyst filter") {
+    val coordGen = Gen.frequency(
+      3 -> Gen.oneOf("0", "", " ", "-0", "0.0", "0x0", "NaN", "abc", "Infinity", "1\u2028"),
+      3 -> Gen.choose(-180.0, 180.0).map(d => f"$d%.4f"),
+      1 -> Gen.const(null))
+    val partGen = Gen.frequency(
+      4 -> Gen.choose(-90.0, 90.0).map(d => f"$d%.4f"),
+      2 -> Gen.oneOf("", " ", "0", "x", "Paris", "NaN", "1e3", "0x1F", " 2.5 ", "1\u2028"))
+    val placeGen = Gen.frequency(
+      6 -> Gen.choose(0, 3).flatMap(n => Gen.listOfN(n, partGen)).map(_.mkString(",")),
+      1 -> Gen.choose(1, 2).flatMap(n => Gen.listOfN(n, partGen)).map(_.mkString(",") + ","),
+      1 -> Gen.oneOf("Corner of 5th and Main", ",", ",,", " ", null))
+    val tripleGen = for { lon <- coordGen; lat <- coordGen; place <- placeGen } yield (lon, lat, place)
+    val alerts = sample(tripleGen, 400, 71L).zipWithIndex
+      .map { case ((lon, lat, place), i) => (i.toLong, lon, lat, place) }
+      .toDF("case_id", "lon", "lat", "place")
+    def fixed(df: org.apache.spark.sql.DataFrame): Map[Long, (Any, Any)] =
+      df.select("case_id", "f_lon", "f_lat").collect()
+        .map(r => r.getLong(0) -> ((r.get(1), r.get(2)))).toMap
+    val got = fixed(Active911.fixCoordinates(alerts))
+    val want = fixed(Active911Catalyst.fixCoordinates(alerts))
+    assert(got.keySet == want.keySet, s"kept ${got.keySet.diff(want.keySet)}, " +
+      s"dropped ${want.keySet.diff(got.keySet)}")
+    want.foreach { case (id, (lon, lat)) =>
+      assert(same(got(id)._1, lon) && same(got(id)._2, lat), s"case $id: ${got(id)}, model ${(lon, lat)}")
+    }
+    // not vacuous: rows are kept, dropped, and moved to the place fallback
+    val all = alerts.select("case_id", "lon").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(want.size > 100 && all.size - want.size > 50)
+    assert(want.count { case (id, (lon, _)) => !same(lon, Active911.jsNumber(all(id))) } > 50)
+    assert(want.values.exists(v => v._1 == null || v._2 == null))
+  }
+
   // --- F6: parseTime is total and matches a java.time model -------------
 
   test("parseTime: total on garbage, exact instant for every tz abbreviation") {
@@ -188,8 +276,8 @@ class PropertySpec extends SparkSpec {
   // --- F6 × A1: the links' time path agrees with parseTime ------------
 
   test("responseLinks: production_time equals isoUtc(parseTime(_)) of the same text") {
-    // the links compute production_time row-at-a-time, parseTime in
-    // Catalyst; both must give the same instant (or null) for any text.
+    // the links and parseTime share one row-at-a-time time path; it must
+    // give the instant (or null) of the Catalyst expression it replaced.
     // No '.' in the text: the line pattern ends the time at the first '.'
     val pad = Gen.oneOf("", " ", "  ")
     val wallGen = for {
@@ -216,10 +304,12 @@ class PropertySpec extends SparkSpec {
       .toDF("case_id", "t", "line")
       .select(col("case_id"), col("t"),
         Active911.responseLinks(col("line"))(0)("production_time").as("link"),
-        Active911.isoUtc(Active911.parseTime(col("t"))).as("catalyst"))
+        Active911.isoUtc(Active911Catalyst.parseTime(col("t"))).as("catalyst"),
+        Active911.isoUtc(Active911.parseTime(col("t"))).as("parsed"))
       .collect()
     got.foreach { r =>
       assert(r.getString(2) == r.getString(3), s"case ${r.getLong(0)}: '${r.getString(1)}'")
+      assert(r.getString(4) == r.getString(3), s"case ${r.getLong(0)}: '${r.getString(1)}'")
     }
     // not vacuous: a third of the cases or more parse
     assert(got.count(!_.isNullAt(3)) > cases.size / 3)

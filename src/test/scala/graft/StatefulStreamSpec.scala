@@ -21,8 +21,7 @@ class StatefulStreamSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(Int, String)]
     val features = Active911.pipeline(mem.toDF.toDF("agency_id", "raw"))
-    var posts = List.empty[String]
-    val sink = new CloudTakSink(body => posts ::= body)
+    val sink = new CloudTakSink(CloudTakPostCollector.fresh())
     val q = features.writeStream
       .outputMode("append")
       .foreachBatch(sink.foreachBatchSink)
@@ -33,7 +32,7 @@ class StatefulStreamSpec extends SparkSpec {
       q.processAllAvailable()
       mem.addData(102 -> Fixtures.envelopes.toMap.apply(102))
       q.processAllAvailable()
-      val batches = posts.reverse.filter(_.contains("\"features\":[{"))
+      val batches = CloudTakPostCollector.bodies.filter(_.contains("\"features\":[{"))
       assert(batches.size == 2)
       assert(batches(0).contains("active911-9001"))
       assert(batches(1).contains("active911-9101"))
