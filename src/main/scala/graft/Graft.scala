@@ -35,6 +35,16 @@ object Graft {
       // .close awaiting the checksum writer pool); corruption detection is for
       // remote checkpoint stores, not local-disk test checkpoints.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      // Without libhadoop, Hadoop's local file system forks a process for
+      // two operations: `readlink`, 8 times per FileContext rename
+      // (ChecksumFs.renameInternal → FileUtil.readLink), and `chmod` on
+      // every create (RawLocalFileSystem.setPermission). A checkpointed
+      // micro-batch renames and creates 5+ files, so it forked ~50
+      // processes. The FileSystem-based manager renames with
+      // File.renameTo, and NioLocalFileSystem sets permissions in-process.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 import graft.Graft
 
@@ -35,11 +36,14 @@ class CloudTakSink(post: String => Unit, maxFeaturesPerPost: Int = 10000)
   /** One job: each task posts its partition's full chunks and returns the
     * partial one; the driver posts the tails, packed to the cap. An empty
     * result still posts one empty collection (the reference always
-    * submits what it has).
+    * submits what it has). Each row is serialized by `to_json` inside
+    * the stage; the Dataset's `toJSON` would round-trip every row
+    * through an external `Row` and generate its serializer in every
+    * task.
     */
   private def postChunked(features: DataFrame): Unit = {
     val (send, cap) = (post, maxFeaturesPerPost)
-    val rows = features.toJSON.queryExecution.toRdd
+    val rows = features.select(to_json(struct(col("*")))).queryExecution.toRdd
     val parts = rows.sparkContext.runJob(rows, (part: Iterator[InternalRow]) => {
       val writer = new CloudTakDataWriter(send, cap)
       part.foreach(writer.write)

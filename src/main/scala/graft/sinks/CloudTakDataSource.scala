@@ -54,7 +54,7 @@ object CloudTakDataSource {
 
   /** Wrap already-serialized feature rows into a FeatureCollection JSON
     * document (reference `task.ts:116-119`). Null struct fields are
-    * omitted upstream by `toJSON`/`to_json`, matching the JS `undefined`
+    * omitted upstream by `to_json`, matching the JS `undefined`
     * serialization of absent `production_time`. Bounded input only —
     * callers chunk to the per-POST cap.
     */

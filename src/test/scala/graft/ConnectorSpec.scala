@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{Active911, Fixtures}
-import graft.sinks.CloudTakSink
+import graft.sinks.{CloudTakDataSource, CloudTakSink}
 import graft.sources.{Active911Config, Active911Connector, Active911Transport}
 
 /** Standalone (no \$outer capture) serializable transport for the DSv2
@@ -81,6 +81,29 @@ class ConnectorSpec extends SparkSpec {
     // absent production_time serialized as omitted (JS undefined), not null
     assert(!body.contains(""""production_time":null"""))
     assert(thrown.getMessage == """["Agency not available"]""")
+    // the sink's serializer writes the bytes Dataset.toJSON writes
+    def asCollections(df: org.apache.spark.sql.DataFrame) =
+      Vector(CloudTakDataSource.toFeatureCollection(df.toJSON.collect().toSeq))
+    assert(CloudTakPostCollector.bodies == asCollections(features))
+    // a responder time that does not parse (production_time absent), no
+    // responders at all (empty links), and remarks that need escaping
+    import spark.implicits._
+    val odd = Active911.pipeline(Seq(501 -> Fixtures.envelope(Fixtures.csv(Seq(
+      Fixtures.row("id" -> "9501", "sent" -> "12/08/2025 18:27:47 MST",
+        "description" -> "Say \"when\"", "details" -> "back\\slash\ttab\nline \u0001 \u2028 caf\u00e9 </script>",
+        "lat" -> "39.7", "lon" -> "-104.9", "source" -> "C\"AD", "units" -> "E4",
+        "responses" -> "Got a response of Respond to Ann O'Neil(42) at sometime."),
+      Fixtures.row("id" -> "9502", "sent" -> "12/08/2025 20:15:00 UTC",
+        "description" -> "MVA", "details" -> "\\\"\r\n",
+        "lat" -> "40.0", "lon" -> "-105.2", "responses" -> ""))))).toDF("agency_id", "raw"))
+    assert(odd.count() == 2)
+    CloudTakPostCollector.fresh()
+    sink.submit(odd, Nil)
+    val oddBody = CloudTakPostCollector.bodies
+    assert(oddBody == asCollections(odd))
+    assert(oddBody.head.contains(""""links":[]"""))
+    assert(oddBody.head.contains("""{"relation":"t-s","callsign":"Ann O'Neil","remarks":"Respond"}"""))
+    assert(oddBody.head.contains("back\\\\slash\\ttab\\nline \\u0001"))
   }
 
   test("sink chunks large results into size-capped POSTs, all before the throw") {

@@ -521,6 +521,22 @@ class PlanSpec extends SparkSpec {
         s"to the allowlist or remove the collect):\n${drift.mkString("\n")}")
   }
 
+  test("source lint: no Dataset toJSON in main (to_json serializes " +
+      "inside the stage)") {
+    // toJSON converts every row to an external Row and back, and
+    // generates that Row serializer in every task of every job
+    val root = java.nio.file.Paths.get("src/main/scala")
+    import scala.jdk.CollectionConverters._
+    val sites = scala.util.Using.resource(java.nio.file.Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains(".toJSON") => s"${root.relativize(p)}:${i + 1}"
+        }
+      }.toList)
+    assert(sites.isEmpty, "use to_json(struct(...)) instead of toJSON at:\n" +
+      sites.mkString("\n"))
+  }
+
   test("source lint: streaming-rig wiring (memory sink, AvailableNow " +
       "trigger) appears only in StreamRig and the hand-wired rigs") {
     // Each entry: file -> (count of `format("memory")` plus

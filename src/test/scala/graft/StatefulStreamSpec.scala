@@ -41,6 +41,69 @@ class StatefulStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a checkpointed lookback stream spawns no process") {
+    // Without libhadoop, Hadoop's stock local file system forks `chmod`
+    // per created file and `readlink` per FileContext rename, ~50
+    // processes per micro-batch of this stream; Graft.session routes
+    // checkpoints around both
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import jdk.jfr.consumer.RecordingStream
+    import org.apache.spark.sql.functions.{col, to_timestamp}
+    import scala.jdk.CollectionConverters._
+    implicit val sq = spark.sqlContext
+    val checkpoint = java.nio.file.Files.createTempDirectory("graft_nofork_ckpt")
+    val fs = new org.apache.hadoop.fs.Path(checkpoint.toUri)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.isInstanceOf[NioLocalFileSystem], fs.getClass.getName)
+    val mem = MemoryStream[(Int, String)]
+    val features = graft.streaming.Lookback.dedupById(
+      Active911.pipeline(mem.toDF().toDF("agency_id", "raw"))
+        .withColumn("ts", to_timestamp(col("properties.start"))), "id", "ts").drop("ts")
+    val sink = new CloudTakSink(CloudTakPostCollector.fresh())
+    // only processes on the checkpoint's files count: the JVM also runs
+    // one-off probes (`getconf PAGESIZE`) and other sessions' cleanup
+    // (`rm -rf` of their artifact dirs) at times no test controls
+    val ckptName = checkpoint.getFileName.toString
+    val spawned = new ConcurrentLinkedQueue[String]()
+    val done = new CountDownLatch(1)
+    val recording = new RecordingStream()
+    recording.enable("jdk.ProcessStart")
+    recording.enable(classOf[StreamDone])
+    recording.onEvent("jdk.ProcessStart", e => {
+      val command = e.getString("command")
+      if (command.contains(ckptName)) spawned.add(command)
+      ()
+    })
+    recording.onEvent("graft.test.StreamDone", _ => done.countDown())
+    recording.startAsync()
+    val q = features.writeStream.option("checkpointLocation", checkpoint.toString)
+      .foreachBatch(sink.foreachBatchSink).start()
+    try {
+      // agency 102, agency 101 (later event times, so inside the
+      // watermark), then 101 again: the lookback window's redelivery,
+      // dropped by the dedup state
+      Seq(102, 101, 101).foreach { a =>
+        mem.addData(a -> Fixtures.envelopes.toMap.apply(a))
+        q.processAllAvailable()
+      }
+      // every event committed before the marker is delivered before it
+      new StreamDone().commit()
+      assert(done.await(60, TimeUnit.SECONDS), "the recording never delivered its marker")
+      val progress = q.recentProgress
+      assert(progress.count(_.numInputRows > 0) >= 3)
+      assert(progress.exists(_.stateOperators.exists(_.numRowsTotal > 0)))
+      val posted = CloudTakPostCollector.bodies.mkString
+      assert("\"id\":\"active911-9001\"".r.findAllIn(posted).size == 1)
+      assert(posted.contains("active911-9101"))
+      assert(spawned.isEmpty,
+        s"${spawned.size} processes spawned: ${spawned.asScala.take(5).mkString("; ")}")
+    } finally {
+      q.stop()
+      recording.close()
+      org.apache.commons.io.FileUtils.deleteDirectory(checkpoint.toFile)
+    }
+  }
+
   test("transformWithState: per-key state accumulates across micro-batches") {
     // cloned session: transformWithState requires the RocksDB state
     // store; scope the provider conf without mutating the shared session
@@ -616,3 +679,9 @@ class StatefulStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 }
+
+/** Marks the end of a recorded workload: a recording stream delivers
+  * it only after every event committed before it.
+  */
+@jdk.jfr.Name("graft.test.StreamDone")
+class StreamDone extends jdk.jfr.Event
