@@ -44,7 +44,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    as expressions, the optimizer inlines the JS `Number()` `CASE` ~14
   *    times and the plan holds ~1,600 expression nodes. A `ScalaUDF`
   *    compiles into the stage like any expression, and the tests keep the
-  *    replaced expressions as the models the functions must equal.
+  *    replaced expressions as the models the functions must equal. Each
+  *    is declared through the Java `UDF1`/`UDF3` API with its result
+  *    type: a typed Scala lambda would carry `ExpressionEncoder`s, whose
+  *    projections every task generates again.
   *  - The responder dedup (reference `task.ts:187-209`, a JS `Map` with
   *    last-writer-wins values but first-insertion iteration order) is done
   *    *inside the row*, not a groupBy+window — the 1:N explode/re-group
@@ -137,7 +140,8 @@ object Active911 {
     else try t.toDouble catch { case _: NumberFormatException => null }
   }
 
-  private val JsNumberUdf = udf((s: String) => jsNumber(s))
+  private val jsNumberOf: UDF1[String, java.lang.Double] = s => jsNumber(s)
+  private val JsNumberUdf = udf(jsNumberOf, DoubleType)
 
   /** [[jsNumber]] on a string column. */
   def jsNumber(c: Column): Column = JsNumberUdf(c)
@@ -208,8 +212,10 @@ object Active911 {
   /** `isoUtc(parseTime(_))` of one string. */
   private def isoTime(raw: String): String = parseMicros(raw).map(IsoClock.format).orNull
 
-  private val MicrosUdf = udf((s: String) => parseMicros(s).map(Long.box).orNull)
-  private val IsoTimeUdf = udf((s: String) => isoTime(s))
+  private val microsOf: UDF1[String, java.lang.Long] = s => parseMicros(s).map(Long.box).orNull
+  private val MicrosUdf = udf(microsOf, LongType)
+  private val isoTimeOf: UDF1[String, String] = s => isoTime(s)
+  private val IsoTimeUdf = udf(isoTimeOf, StringType)
 
   /** ISO-8601 with milliseconds, as moment's `toISOString()` emits
     * (reference `task.ts:72,75`). Requires UTC session timezone.

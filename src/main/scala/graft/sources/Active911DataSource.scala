@@ -2,10 +2,12 @@ package graft.sources
 
 import java.util
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,11 +25,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * }}}
   *
   * Planning (driver): ONE login (token reuse, reference CHANGELOG
-  * v2.5.0), agency validation (J1 throw on inaccessible), then one
-  * [[InputPartition]] PER AGENCY. Execution (executors): each partition
-  * fetches its agency's 6-hour envelope — at fleet scale the per-agency
-  * HTTP fan-out runs in parallel across the cluster instead of
-  * sequentially on the driver like the reference (task.ts:128 loop).
+  * v2.5.0), agency validation (J1 throw on inaccessible), then the
+  * agencies packed into one [[InputPartition]] per task slot:
+  * `min(#agencies, slots)` partitions, agency `i` in partition
+  * `i mod n`, where `slots` is Spark's leaf-scan parallelism
+  * (`spark.sql.leafNodeDefaultParallelism`, else the context's default
+  * parallelism), as the file sources pack small files. Execution
+  * (executors): each partition fetches its agencies' 6-hour envelopes
+  * one after the other, one row per agency — the fan-out runs in
+  * parallel across the slots instead of sequentially on the driver like
+  * the reference (task.ts:128 loop).
+  *
+  * Why packed, not one partition per agency: every task pays a fixed
+  * cost (deserializing the task binary, generating the scan's and the
+  * stage's projections) whatever its agency's size. For 24 agencies of
+  * ~25 alerts on 3 slots (4-core host), 24 tasks took ~500 ms of task
+  * time per cycle and 3 packed tasks ~170–260 ms for the same rows.
+  * Round-robin rather than contiguous ranges keeps the largest envelopes
+  * apart when the agencies come sorted by size. With no more agencies
+  * than slots, every agency still gets its own partition.
   *
   * Error channel (E1): a transport failure becomes a DATA row
   * `(agency_id, raw=null, fetch_error=msg)` instead of driver-side
@@ -76,8 +92,10 @@ class Active911ScanBuilder(options: CaseInsensitiveStringMap) extends ScanBuilde
   override def build(): Scan = new Active911Scan(options)
 }
 
-/** One fetch assignment: everything an executor needs, nothing mutable. */
-case class Active911InputPartition(agencyId: Int, token: String,
+/** One fetch assignment: everything an executor needs, nothing mutable.
+  * The agencies are fetched in this order, one row each.
+  */
+case class Active911InputPartition(agencyIds: Seq[Int], token: String,
                                    fromMs: Long, toMs: Long) extends InputPartition
 
 class Active911Scan(options: CaseInsensitiveStringMap) extends Scan with Batch {
@@ -94,10 +112,13 @@ class Active911Scan(options: CaseInsensitiveStringMap) extends Scan with Batch {
     val cfg = Active911Config(options.get("username"), options.get("password"),
       requested)
     val (token, accessible) = conn.login(cfg)
-    val agencies = conn.validateAgencies(cfg.agencies, accessible)
+    val agencies = conn.validateAgencies(cfg.agencies, accessible).toIndexedSeq
     val (fromMs, toMs) = conn.window(options.get("nowMs").toLong)
-    agencies.map(id =>
-      Active911InputPartition(id, token, fromMs, toMs): InputPartition).toArray
+    val slots = SQLConf.get.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+      .getOrElse(SparkSession.active.sparkContext.defaultParallelism)
+    val n = math.min(agencies.size, slots)
+    Array.tabulate[InputPartition](n)(k =>
+      Active911InputPartition((k until agencies.size by n).map(agencies), token, fromMs, toMs))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -117,19 +138,19 @@ class Active911ReaderFactory(transport: Active911Transport)
 class Active911PartitionReader(transport: Active911Transport,
                                p: Active911InputPartition)
     extends PartitionReader[InternalRow] {
-  private var emitted = false
+  private val agencies = p.agencyIds.iterator
   private var row: InternalRow = _
 
   override def next(): Boolean = {
-    if (emitted) return false
-    emitted = true
+    if (!agencies.hasNext) return false
+    val id = agencies.next()
     row =
       try {
-        val raw = transport.fetchAlerts(p.token, p.agencyId, p.fromMs, p.toMs)
-        InternalRow(p.agencyId, UTF8String.fromString(raw), null)
+        val raw = transport.fetchAlerts(p.token, id, p.fromMs, p.toMs)
+        InternalRow(id, UTF8String.fromString(raw), null)
       } catch {
         case e: Exception =>
-          InternalRow(p.agencyId, null, UTF8String.fromString(e.getMessage))
+          InternalRow(id, null, UTF8String.fromString(e.getMessage))
       }
     true
   }

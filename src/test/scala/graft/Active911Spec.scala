@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Conv, CsvToStructs, Expression, HigherOrderFunction, JsonToStructs, RLike}
+import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Conv, CsvToStructs, Expression, HigherOrderFunction, JsonToStructs, RLike, ScalaUDF}
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 
@@ -153,6 +153,19 @@ class Active911Spec extends SparkSpec {
     assert(count { case e: Conv => e } == 0)
     val nodes = count { case e => e }
     assert(nodes <= 200, s"$nodes expression nodes in:\n$plan")
+  }
+
+  test("row functions carry no encoders (no per-task encoder projections)") {
+    // a typed Scala lambda UDF carries ExpressionEncoders, and every task
+    // generates their Safe/UnsafeProjections from inside the stage
+    val plans = Seq(
+      Active911.pipeline(Fixtures.envelopes.toDF("agency_id", "raw")),
+      Seq("1").toDF("s").select(Active911.jsNumber(col("s")), Active911.parseTime(col("s"))))
+      .map(_.queryExecution.analyzed)
+    val udfs = plans.flatMap(_.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u })))
+    assert(udfs.size >= 5)
+    val typed = udfs.filter(u => u.inputEncoders.exists(_.isDefined) || u.outputEncoder.isDefined)
+    assert(typed.isEmpty, s"UDFs with encoders: ${typed.mkString(", ")}")
   }
 
   test("remarks: byte-exact template whitespace (task.ts:221-225)") {

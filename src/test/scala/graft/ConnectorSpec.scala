@@ -18,6 +18,36 @@ private class V2MockTransport(failing: Set[Int] = Set.empty)
   }
 }
 
+/** Ten agencies (201–210), each serving agency 101's fixture envelope.
+  * Every fetch is counted in [[PackedFetches]]: the transport is
+  * serialized into the tasks, so a field of its own would count in a
+  * deserialized copy.
+  */
+private class PackedMockTransport(failing: Set[Int] = Set.empty)
+    extends Active911Transport {
+  def login(u: String, p: String): String = {
+    val ids = PackedFetches.Agencies.map(id => s"""{"id":$id}""").mkString(",")
+    s"""({"result":"success","message":{"jwt":"tok-abc","agencies":[$ids]}})"""
+  }
+  def fetchAlerts(token: String, agencyId: Int, fromMs: Long, toMs: Long): String = {
+    PackedFetches.record(agencyId)
+    if (failing.contains(agencyId)) throw new RuntimeException(s"http 500 for $agencyId")
+    Fixtures.envelopes.toMap.apply(101)
+  }
+}
+
+/** Process-wide fetch counts of [[PackedMockTransport]]. */
+object PackedFetches {
+  val Agencies: Seq[Int] = 201 to 210
+  private val counts = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+  def record(agencyId: Int): Unit = { counts.merge(agencyId, 1, _ + _); () }
+  def clear(): Unit = counts.clear()
+  def snapshot: Map[Int, Int] = {
+    import scala.jdk.CollectionConverters._
+    counts.asScala.toMap
+  }
+}
+
 /** Connector ring semantics (reference task.ts:98-152, 238-279): login
   * parse, agency validation throw, window arithmetic, HTTP-error
   * accumulation, and the submit-then-fail ordering of the sink.
@@ -218,6 +248,101 @@ class ConnectorSpec extends SparkSpec {
       val feats = Active911.pipeline(df.select("agency_id", "raw"))
       assert(feats.count() > 0)
     } finally graft.sources.Active911DataSource.transport = null
+  }
+
+  /** The DSv2 source over [[PackedMockTransport]], fetch counts cleared. */
+  private def withPackedSource(failing: Set[Int] = Set.empty)(
+      body: org.apache.spark.sql.DataFrame => Unit): Unit = {
+    graft.sources.Active911DataSource.transport = new PackedMockTransport(failing)
+    PackedFetches.clear()
+    try body(spark.read.format("graft.sources.Active911DataSource")
+      .option("username", "u").option("password", "p")
+      .option("nowMs", "1765200000000").load())
+    finally graft.sources.Active911DataSource.transport = null
+  }
+
+  test("DSv2 read path: agencies packed into one partition per task slot") {
+    withPackedSource() { df =>
+      // 10 agencies on local[4]: min(#agencies, slots) partitions
+      assert(df.rdd.getNumPartitions == 4)
+      val rows = df.collect()
+      assert(rows.map(_.getInt(0)).sorted.toSeq == PackedFetches.Agencies)
+      assert(rows.forall(r => !r.isNullAt(1) && r.isNullAt(2)))
+      assert(PackedFetches.snapshot == PackedFetches.Agencies.map(_ -> 1).toMap)
+    }
+  }
+
+  test("DSv2 read path: a failed fetch in a packed partition is an error row, " +
+      "its partition mates still deliver") {
+    // agency i goes to partition i mod 4: 205 sits between 201 and 209
+    withPackedSource(failing = Set(205)) { df =>
+      val rows = df.collect().sortBy(_.getInt(0))
+      assert(rows.map(_.getInt(0)).toSeq == PackedFetches.Agencies)
+      val (failed, ok) = rows.partition(!_.isNullAt(2))
+      assert(failed.map(_.getInt(0)).toSeq == Seq(205))
+      assert(failed.head.getString(2) == "http 500 for 205" && failed.head.isNullAt(1))
+      assert(ok.map(_.getInt(0)).toSeq == PackedFetches.Agencies.filter(_ != 205))
+      assert(ok.forall(!_.isNullAt(1)))
+      assert(PackedFetches.snapshot == PackedFetches.Agencies.map(_ -> 1).toMap)
+    }
+  }
+
+  test("DSv2 read path: spark.sql.leafNodeDefaultParallelism sets the slots") {
+    val key = "spark.sql.leafNodeDefaultParallelism"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "2")
+    try withPackedSource() { df =>
+      assert(df.rdd.getNumPartitions == 2)
+      assert(df.collect().map(_.getInt(0)).sorted.toSeq == PackedFetches.Agencies)
+      assert(PackedFetches.snapshot == PackedFetches.Agencies.map(_ -> 1).toMap)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("DSv2 source → pipeline → DSv2 sink over packed agencies runs 4 tasks") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    import spark.implicits._
+    val tag = "graft.test.packed"
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty(tag) != null)) {
+          js.stageIds.foreach(stages.add)
+          jobs.add(js.jobId)
+        }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (jobs.contains(je.jobId)) ended.incrementAndGet()
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (stages.contains(te.stageId)) tasks.incrementAndGet()
+    }
+    val perAgency = Active911.pipeline(Fixtures.envelopes.filter(_._1 == 101)
+      .toDF("agency_id", "raw")).count()
+    CloudTakPostCollector.posts.clear()
+    graft.sinks.CloudTakDataSource.post = CloudTakPostCollector.record _
+    spark.sparkContext.addSparkListener(listener)
+    try withPackedSource() { df =>
+      val features = Active911.pipeline(df.filter(col("fetch_error").isNull)
+        .select("agency_id", "raw"))
+      spark.sparkContext.setLocalProperty(tag, "1")
+      try features.select(to_json(struct(features.columns.map(col).toSeq: _*)).as("feature"))
+        .write.format("graft.sinks.CloudTakDataSource").mode("append").save()
+      finally spark.sparkContext.setLocalProperty(tag, null)
+      // the listener bus is asynchronous; a job's end follows its tasks' ends
+      val deadline = System.nanoTime() + 10000000000L
+      while ((jobs.isEmpty || ended.get < jobs.size) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.size == 1 && ended.get == 1)
+      assert(tasks.get == 4, s"${tasks.get} tasks")
+      val posted = CloudTakPostCollector.bodies
+        .map("\"type\":\"Feature\"".r.findAllIn(_).size).sum
+      assert(posted == 10 * perAgency)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.sinks.CloudTakDataSource.post = null
+    }
   }
 
   test("DSv2 read path: agency subset honored, inaccessible throws at planning") {

@@ -537,6 +537,19 @@ class PlanSpec extends SparkSpec {
       sites.mkString("\n"))
   }
 
+  test("source lint: no typed-lambda udf in the connector's row functions " +
+      "(UDF1/UDF3 with an explicit result type)") {
+    // a typed Scala lambda builds ExpressionEncoders, and every task
+    // generates their projections from inside the stage
+    val p = java.nio.file.Paths.get("src/main/scala/graft/ops/Active911.scala")
+    import scala.jdk.CollectionConverters._
+    val sites = java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+      case (line, i) if line.contains("udf((") => s"Active911.scala:${i + 1}"
+    }
+    assert(sites.isEmpty, "declare the function as a UDF1/UDF3 with its result type at:\n" +
+      sites.mkString("\n"))
+  }
+
   test("source lint: streaming-rig wiring (memory sink, AvailableNow " +
       "trigger) appears only in StreamRig and the hand-wired rigs") {
     // Each entry: file -> (count of `format("memory")` plus
