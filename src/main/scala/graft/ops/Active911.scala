@@ -9,9 +9,14 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.api.java.{UDF1, UDF3}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.StringDecode
+import org.apache.spark.sql.catalyst.expressions.csv.CsvToStructsEvaluator
+import org.apache.spark.sql.catalyst.expressions.json.JsonToStructsEvaluator
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, NumberConverter, TimestampFormatter}
 import org.apache.spark.sql.catalyst.util.LegacyDateFormats.SIMPLE_DATE_FORMAT
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,29 +30,32 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Every step here is a narrow transformation — the whole pipeline
   *    runs with ZERO shuffles; one input split (an agency's envelope
   *    batch) never leaves its executor.
-  *  - Below the sink the pipeline is ONE whole-stage-codegen stage, and
-  *    each envelope's JSON and each CSV record is parsed once. Two things
-  *    keep it so. No array higher-order function (`transform`, `filter`,
-  *    `aggregate`) appears: in Spark 4.1 they are `CodegenFallback`, and
-  *    one of them drops its whole Filter or Project out of codegen, so
-  *    every task regenerates that operator's code. And both parses are
-  *    generators (`explode`/`inline` of a one-element array): the
-  *    optimizer pushes a filter below a plain `from_csv`/`from_json`
-  *    projection by pasting the parse into the predicate once per column
-  *    read, but it cannot push a predicate on generated columns below the
-  *    `Generate`.
-  *  - Each per-row scalar (JS `Number()`, the coordinate fix, the time
-  *    parse, the responder links) is ONE row-at-a-time function, not a
-  *    tree of Catalyst expressions. A stream re-optimizes its plan and
-  *    regenerates the stage's Java source on every trigger, and a batch
-  *    on every cycle, so plan size is a fixed cost per trigger: written
-  *    as expressions, the optimizer inlines the JS `Number()` `CASE` ~14
-  *    times and the plan holds ~1,600 expression nodes. A `ScalaUDF`
-  *    compiles into the stage like any expression, and the tests keep the
-  *    replaced expressions as the models the functions must equal. Each
-  *    is declared through the Java `UDF1`/`UDF3` API with its result
-  *    type: a typed Scala lambda would carry `ExpressionEncoder`s, whose
-  *    projections every task generates again.
+  *  - From the source to the sink the pipeline is ONE whole-stage-codegen
+  *    stage of two generators and two projections, and each envelope and
+  *    each CSV record is parsed once. No array higher-order function
+  *    (`transform`, `filter`, `aggregate`) appears: in Spark 4.1 they are
+  *    `CodegenFallback`, and one of them drops its whole Filter or
+  *    Project out of codegen, so every task regenerates that operator's
+  *    code. `from_json` is `CodegenFallback` too, which is one more
+  *    reason the envelope decode is a row function.
+  *  - Each row-level step (the envelope decode, JS `Number()`, the
+  *    coordinate fix, the time parse, the responder links) is ONE
+  *    row-at-a-time function, not a tree of Catalyst expressions. A
+  *    stream re-analyzes, re-optimizes and regenerates the stage's Java
+  *    source on every trigger (and plans each batch twice), a batch on
+  *    every cycle, so plan size is a fixed cost per trigger: written as
+  *    expressions, the optimizer inlines the JS `Number()` `CASE` ~14
+  *    times and the plan holds ~1,600 expression nodes, and the
+  *    four-step decode alone was a third of the 146 left after that. A
+  *    `ScalaUDF` compiles into the stage like any expression, and the
+  *    tests keep the replaced expressions as the models the functions
+  *    must equal. Each is declared through the Java `UDF1`/`UDF3` API
+  *    with its result type: a typed Scala lambda would carry
+  *    `ExpressionEncoder`s, whose projections every task generates
+  *    again. The two that drop or multiply rows (decode, fix) return an
+  *    array that `inline` explodes, so the optimizer has no predicate to
+  *    push below them and no parse to paste into a pushed filter once
+  *    per column read.
   *  - The responder dedup (reference `task.ts:187-209`, a JS `Map` with
   *    last-writer-wins values but first-insertion iteration order) is done
   *    *inside the row*, not a groupBy+window — the 1:N explode/re-group
@@ -146,11 +154,14 @@ object Active911 {
   /** [[jsNumber]] on a string column. */
   def jsNumber(c: Column): Column = JsNumberUdf(c)
 
+  private val JsonpHead = "^.*?\\("
+  private val JsonpTail = "\\)$"
+
   /** Strip a JSONP wrapper: drop everything up to the first '(' and a
     * trailing ')' (reference `task.ts:156-160`).
     */
   def unwrapJsonp(c: Column): Column =
-    regexp_replace(regexp_replace(trim(c), "^.*?\\(", ""), "\\)$", "")
+    regexp_replace(regexp_replace(trim(c), JsonpHead, ""), JsonpTail, "")
 
   /** The leading `M/d/yyyy H:mm:ss` of an unzoned time (group 1). */
   private val FallbackDateRegex =
@@ -223,29 +234,67 @@ object Active911 {
   def isoUtc(ts: Column): Column =
     date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
 
-  /** Split one CSV text blob into records on newlines that are OUTSIDE
-    * quoted fields (the `responses` column embeds newlines — reference
-    * `task.ts:195-196`; SURVEY.md §7.5#3). Each record is MATCHED as a
-    * run of unquoted non-newline text and quoted fields (standard `""`
-    * escaping is two adjacent quoted runs), so one linear pass covers
-    * the blob; possessive quantifiers keep java.util.regex iterating
-    * instead of recursing per quote pair. Blank records produce no
-    * match and are skipped. For file-based ingest use
-    * `spark.read.option("multiLine",true).csv`.
+  /** One CSV record of a decoded blob: a run of unquoted non-newline text
+    * and quoted fields (standard `""` escaping is two adjacent quoted
+    * runs), so newlines inside quotes (the `responses` column — reference
+    * `task.ts:195-196`; SURVEY.md §7.5#3) never split a record. The
+    * matches cover the blob in one linear pass; possessive quantifiers
+    * keep java.util.regex iterating instead of recursing per quote pair.
+    * Blank lines produce no match.
     */
-  def csvRecords(text: Column): Column =
-    regexp_extract_all(regexp_replace(text, "\r\n", "\n"),
-      lit("(?:[^\"\n]++|\"[^\"]*+\")++"), lit(0))
+  private val CsvRecord = Pattern.compile("(?:[^\"\n]++|\"[^\"]*+\")++")
+  private val Jsonp = Seq(JsonpHead, JsonpTail).map(Pattern.compile)
+  private val Utf8 = UTF8String.fromString("UTF-8")
 
-  /** Envelope rows with their parsed body as one `_env` struct column
-    * (`result`, `message`), pass-through columns first. The JSON parse
-    * is the element of a one-element array exploded by a generator, so a
-    * filter on `_env` cannot be pushed below it and copy the parse.
+  /** The whole envelope decode of one raw envelope, for [[alertsFromEnvelopes]].
+    * Step for step the four Catalyst steps it replaced (kept in the tests
+    * as the model), with the same code Spark runs for each: Spark's
+    * `trim` and the two JSONP patterns applied as `regexp_replace` does;
+    * the `JsonToStructsEvaluator` and `CsvToStructsEvaluator` that
+    * `from_json` and `from_csv` evaluate, with their options, schema,
+    * corrupt-record column and time zone; `unbase64`'s MIME decoder; and
+    * `decode`'s `StringDecode.decode` under the session's legacy flags,
+    * so malformed UTF-8 raises as it does there. Rows are dropped as the
+    * filters did: `result = 'error'`, a null envelope or message, the
+    * first record (the header) and records blank after `trim`.
+    *
+    * Holds only the settings it was built with; the parsers keep
+    * per-record state, so each thread gets its own pair.
     */
-  private def parsedEnvelopes(envelopes: DataFrame, rawCol: String): (Seq[Column], DataFrame) = {
-    val passThrough = envelopes.columns.filterNot(_ == rawCol).map(col).toSeq
-    (passThrough, envelopes.select((passThrough :+ explode(array(
-      from_json(unwrapJsonp(col(rawCol)), envelopeSchema))).as("_env")): _*))
+  private final case class Decode(timeZone: String, corruptRecord: String,
+      legacyCharsets: Boolean, legacyErrorAction: Boolean, variantDupKeys: Boolean)
+      extends UDF1[String, Seq[Row]] {
+    @transient private lazy val parsers = ThreadLocal.withInitial(() => (
+      JsonToStructsEvaluator(Map.empty, envelopeSchema, corruptRecord, Some(timeZone),
+        variantDupKeys),
+      CsvToStructsEvaluator(Map("quote" -> "\"", "escape" -> "\""), alertSchema,
+        corruptRecord, Some(timeZone), None)))
+
+    def call(raw: String): Seq[Row] = {
+      val (json, csv) = parsers.get
+      val body = Option(raw).map(r =>
+        Jsonp.foldLeft(sparkTrim(r))((s, p) => p.matcher(s).replaceAll("")))
+      val env = body.flatMap(b =>
+        Option(json.evaluate(UTF8String.fromString(b)).asInstanceOf[InternalRow]))
+      val message = env.filter(e => e.isNullAt(0) || e.getUTF8String(0).toString != "error")
+        .collect { case e if !e.isNullAt(1) => e.getUTF8String(1).toString }
+      message.toSeq.flatMap { m =>
+        val bytes = java.util.Base64.getMimeDecoder.decode(m)
+        val text = StringDecode.decode(bytes, Utf8, legacyCharsets, legacyErrorAction).toString
+        val records = CsvRecord.matcher(text.replace("\r\n", "\n"))
+        val alerts = Vector.newBuilder[Row]
+        var header = true
+        while (records.find()) {
+          val record = UTF8String.fromString(records.group())
+          if (header) header = false
+          else if (record.trim().numBytes > 0) alerts += toRow(csv.evaluate(record))
+        }
+        alerts.result()
+      }
+    }
+
+    private def toRow(alert: InternalRow): Row = Row.fromSeq(AlertColumns.indices.map(i =>
+      if (alert.isNullAt(i)) null else alert.getUTF8String(i).toString))
   }
 
   /** Decode wire envelopes into alert rows (reference `task.ts:155-170`):
@@ -254,30 +303,36 @@ object Active911 {
     * schema order). Rows with `result = 'error'` are excluded — route
     * them through [[envelopeErrors]] (the reference's error side channel,
     * `task.ts:162-165`). Pass-through columns of `envelopes` (e.g.
-    * `agency_id`) are preserved.
+    * `agency_id`) are preserved. Truncated base64 and malformed UTF-8
+    * fail the query, as `unbase64` and `decode` do.
     *
-    * The CSV parse is a generator (`inline` of a one-element array), so
-    * each record is parsed once: were it a projection, the optimizer
-    * would push any filter on alert columns below it and paste a pruned
-    * `from_csv` into the predicate for every column read.
+    * One generator over one row function ([[Decode]]), built with the
+    * settings of the active session: as four Catalyst steps (a JSON
+    * parse, a filter, a record split and a CSV parse, each a generator
+    * so that no filter is pushed below a parse) the decode was 13
+    * physical operators, most of the plan a trigger re-plans.
     */
   def alertsFromEnvelopes(envelopes: DataFrame, rawCol: String = "raw"): DataFrame = {
-    val (passThrough, env) = parsedEnvelopes(envelopes, rawCol)
-    env
-      .filter(coalesce(col("_env.result"), lit("")) =!= "error")
-      .select((passThrough :+
-        posexplode(csvRecords(decode(unbase64(col("_env.message")), "UTF-8")))): _*)
-      .filter(col("pos") >= 1 && trim(col("col")) =!= "") // drop header + trailing blank
-      .select((passThrough :+ inline(array(from_csv(col("col"), alertSchema,
-        Map("quote" -> "\"", "escape" -> "\""))))): _*)
+    val conf = SQLConf.get
+    val decode = udf(Decode(conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord,
+      conf.legacyJavaCharsets, conf.legacyCodingErrorAction,
+      conf.getConf(SQLConf.VARIANT_ALLOW_DUPLICATE_KEYS)),
+      ArrayType(alertSchema, containsNull = false))
+    val passThrough = envelopes.columns.filterNot(_ == rawCol).map(col).toSeq
+    envelopes.select((passThrough :+ inline(decode.asNonNullable()(col(rawCol)))): _*)
   }
 
   /** The error branch of the envelope decode (reference `task.ts:162-165`):
-    * one row per failed agency envelope with its API error message.
+    * one row per failed agency envelope with its API error message. The
+    * JSON parse is the element of a one-element array exploded by a
+    * generator, so the filter on `_env` cannot be pushed below it and
+    * copy the parse.
     */
   def envelopeErrors(envelopes: DataFrame, rawCol: String = "raw"): DataFrame = {
-    val (passThrough, env) = parsedEnvelopes(envelopes, rawCol)
-    env
+    val passThrough = envelopes.columns.filterNot(_ == rawCol).map(col).toSeq
+    envelopes
+      .select((passThrough :+ explode(array(
+        from_json(unwrapJsonp(col(rawCol)), envelopeSchema))).as("_env")): _*)
       .filter(col("_env.result") === "error")
       .select((passThrough :+ col("_env.message").as("error")): _*)
   }
@@ -368,33 +423,51 @@ object Active911 {
   private val Ind32 = " " * 32
   private val Ind28 = " " * 28
 
+  /** The values of a Feature as columns, beside the columns `keep`. */
+  private def featureValues(alerts: DataFrame, keep: String*): DataFrame =
+    alerts.select(keep.map(col) ++ Seq(
+      concat(lit("active911-"), coalesce(col("id"), lit(""))).as("id"),
+      coalesce(col("description"), lit("")).as("callsign"),
+      IsoTimeUdf(col("sent")).as("start"),
+      responseLinks(col("responses")).as("links"),
+      concat(
+        lit("\n" + Ind32 + "Groups: "), coalesce(col("units"), lit("")),
+        lit("\n" + Ind32 + "Author: "), coalesce(col("source"), lit("")),
+        lit("\n" + Ind32), coalesce(col("details"), lit("")),
+        lit("\n" + Ind28)).as("remarks")): _*)
+
+  /** The Feature of [[featureValues]] and the fixed `f_lon`/`f_lat`. */
+  private def assemble(values: DataFrame): DataFrame =
+    values.select(
+      col("id"),
+      lit("Feature").as("type"),
+      struct(Seq("callsign", "start", "links", "remarks").map(col): _*).as("properties"),
+      struct(
+        lit("Point").as("type"),
+        array(col("f_lon"), col("f_lat")).as("coordinates")).as("geometry"))
+
   /** GeoJSON Point Feature assembly (reference `task.ts:214-231`), with
     * the remarks template's exact newlines/indentation (`task.ts:221-225`)
     * byte-preserved for golden-file parity.
     * Expects [[fixCoordinates]] to have run (consumes `f_lon`/`f_lat`).
     */
   def features(fixed: DataFrame): DataFrame =
-    fixed.select(
-      concat(lit("active911-"), coalesce(col("id"), lit(""))).as("id"),
-      lit("Feature").as("type"),
-      struct(
-        coalesce(col("description"), lit("")).as("callsign"),
-        IsoTimeUdf(col("sent")).as("start"),
-        responseLinks(col("responses")).as("links"),
-        concat(
-          lit("\n" + Ind32 + "Groups: "), coalesce(col("units"), lit("")),
-          lit("\n" + Ind32 + "Author: "), coalesce(col("source"), lit("")),
-          lit("\n" + Ind32), coalesce(col("details"), lit("")),
-          lit("\n" + Ind28)).as("remarks")).as("properties"),
-      struct(
-        lit("Point").as("type"),
-        array(col("f_lon"), col("f_lat")).as("coordinates")).as("geometry"))
+    assemble(featureValues(fixed, "f_lon", "f_lat"))
 
   /** Full reference dataflow: wire envelopes → Features (SURVEY.md §7.2
     * minimum slice: S3,S5,S6,P1,P2,P3,F6,G1,F4,A1,A2,R1,U1 in one
     * shuffle-free lineage). Union across agencies is structural: one
     * input row per agency envelope (SURVEY.md §2.8 U1, bag semantics).
+    *
+    * The [[features]] values are computed before the coordinate fix and
+    * put into structs after it, so `properties` is a struct of columns.
+    * The optimizer inlines such a struct into a consumer that reads some
+    * of its fields and prunes the others: q50 reads `callsign` and
+    * `remarks` and never runs the links or `start`. A struct of
+    * expressions read twice stays whole, and all of it is computed. The
+    * price: the rows the fix drops have their values computed too.
     */
   def pipeline(envelopes: DataFrame, rawCol: String = "raw"): DataFrame =
-    features(fixCoordinates(alertsFromEnvelopes(envelopes, rawCol)))
+    assemble(fixCoordinates(featureValues(alertsFromEnvelopes(envelopes, rawCol),
+      "lon", "lat", "place")))
 }

@@ -1559,12 +1559,18 @@ object Ext {
     "q50_active911_features" -> ((s, d) => {
       import s.implicits._
       val env = Fixtures.envelopes.toDF("agency_id", "raw")
+      // `geometry` read once: read twice, its non-cheap `array` keeps the
+      // optimizer from inlining the Feature projection, and the links and
+      // `start` q50 never reads are computed
       Active911.pipeline(env)
         .select(col("id"), col("type"),
           col("properties.callsign").as("callsign"),
-          element_at(col("geometry.coordinates"), 1).as("lon"),
-          element_at(col("geometry.coordinates"), 2).as("lat"),
+          col("geometry.coordinates").as("coordinates"),
           col("properties.remarks").as("remarks"))
+        .select(col("id"), col("type"), col("callsign"),
+          element_at(col("coordinates"), 1).as("lon"),
+          element_at(col("coordinates"), 2).as("lat"),
+          col("remarks"))
         .orderBy(col("id"))
     }),
 

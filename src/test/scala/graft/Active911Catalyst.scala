@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DoubleType
 
 import graft.ops.Active911
 
-/** The Catalyst-expression forms of `Active911`'s per-row scalars, as
+/** The Catalyst-expression forms of `Active911`'s per-row steps, as
   * they stood before each became one row-at-a-time function: the models
   * PropertySpec holds the row functions to, value for value.
   */
@@ -68,5 +68,36 @@ object Active911Catalyst {
       .withColumn("f_lon", when(needFix, placeLon).otherwise(lonN))
       .withColumn("f_lat", when(needFix, placeLat).otherwise(latN))
       .filter(!needFix || placeValid)
+  }
+
+  /** JSONP unwrap: Spark `trim`, then drop up to the first '(' and one
+    * trailing ')'.
+    */
+  def unwrapJsonp(c: Column): Column =
+    regexp_replace(regexp_replace(trim(c), "^.*?\\(", ""), "\\)$", "")
+
+  /** The records of a CSV blob: after CRLF → LF, every match of unquoted
+    * non-newline text and quoted fields (possessive, so linear).
+    */
+  def csvRecords(text: Column): Column =
+    regexp_extract_all(regexp_replace(text, "\r\n", "\n"),
+      lit("(?:[^\"\n]++|\"[^\"]*+\")++"), lit(0))
+
+  /** The envelope decode in four Catalyst steps: the JSON parse, the
+    * error filter, the base64/UTF-8 decode and record split with the
+    * header and blank-record filter, then the CSV parse. Each parse is a
+    * generator, so no filter is pushed below it.
+    */
+  def alertsFromEnvelopes(envelopes: DataFrame, rawCol: String = "raw"): DataFrame = {
+    val passThrough = envelopes.columns.filterNot(_ == rawCol).map(col).toSeq
+    envelopes
+      .select((passThrough :+ explode(array(
+        from_json(unwrapJsonp(col(rawCol)), Active911.envelopeSchema))).as("_env")): _*)
+      .filter(coalesce(col("_env.result"), lit("")) =!= "error")
+      .select((passThrough :+
+        posexplode(csvRecords(decode(unbase64(col("_env.message")), "UTF-8")))): _*)
+      .filter(col("pos") >= 1 && trim(col("col")) =!= "")
+      .select((passThrough :+ inline(array(from_csv(col("col"), Active911.alertSchema,
+        Map("quote" -> "\"", "escape" -> "\""))))): _*)
   }
 }

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Conv, CsvToStructs, Expression, HigherOrderFunction, JsonToStructs, RLike, ScalaUDF}
-import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.ops.{Active911, Fixtures}
 
@@ -116,34 +118,39 @@ class Active911Spec extends SparkSpec {
   test("pipeline: one codegen stage, each envelope and CSV record parsed once") {
     // an array lambda drops its whole Filter or Project out of whole-stage
     // codegen (each task then regenerates its code), and a parse under a
-    // pushed filter is pasted into the predicate once per column read
+    // pushed filter is pasted into the predicate once per column read; the
+    // whole envelope decode is one row function under one generator
     val plan = Active911.pipeline(Fixtures.envelopes.toDF("agency_id", "raw"))
       .queryExecution.executedPlan
     def count(pf: PartialFunction[Expression, Expression]): Int =
       plan.collect { case p => p.expressions.map(_.collect(pf).size).sum }.sum
-    assert(count { case e: CsvToStructs => e } == 1)
-    assert(count { case e: JsonToStructs => e } == 1)
+    assert(count { case e: CsvToStructs => e } == 0)
+    assert(count { case e: JsonToStructs => e } == 0)
     assert(count { case e: HigherOrderFunction => e } == 0)
-    // every operator from the CSV parse up to the Feature projection (the
-    // coordinate filter, f_lon and properties) runs in one codegen stage
+    val decodes = count {
+      case u: ScalaUDF if u.dataType == ArrayType(Active911.alertSchema, containsNull = false) => u
+    }
+    assert(decodes == 1)
+    // two generators: the decode and the coordinate fix
+    assert(plan.collect { case g: GenerateExec => g }.size == 2)
+    // every operator from the scan up to the Feature projection runs in one
+    // codegen stage
     def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
       case _: InputAdapter => Nil
       case other => other +: other.children.flatMap(inStage)
     }
     val stages = plan.collect { case w: WholeStageCodegenExec => inStage(w.child) }
-    val csvParse = plan.find(_.expressions.exists(_.exists(_.isInstanceOf[CsvToStructs]))).get
-    val path = plan.collect {
-      case p if !p.isInstanceOf[WholeStageCodegenExec] && p.find(_ eq csvParse).isDefined => p
-    }
-    assert(path.exists(_.output.exists(_.name == "properties")))
-    assert(stages.exists(stage => path.forall(op => stage.exists(_ eq op))),
+    val ops = plan.collect { case p if !p.isInstanceOf[WholeStageCodegenExec] && p.children.nonEmpty => p }
+    assert(ops.exists(_.output.exists(_.name == "properties")))
+    assert(stages.size == 1 && ops.forall(op => stages.head.exists(_ eq op)),
       s"the Feature lineage is split across codegen stages or falls back:\n$plan")
   }
 
   test("pipeline: compact plan, each per-row scalar one row function") {
     // a stream re-optimizes and regenerates the stage's source on every
     // trigger, so plan size is paid per trigger: the JS Number() CASE
-    // inlined into the coordinate fix made ~1,600 expression nodes
+    // inlined into the coordinate fix made ~1,600 expression nodes, and
+    // the four Catalyst decode steps 146 with 13 operators
     val plan = Active911.pipeline(Fixtures.envelopes.toDF("agency_id", "raw"))
       .queryExecution.executedPlan
     def count(pf: PartialFunction[Expression, Expression]): Int =
@@ -152,7 +159,21 @@ class Active911Spec extends SparkSpec {
     assert(count { case e: CaseWhen => e } == 0)
     assert(count { case e: Conv => e } == 0)
     val nodes = count { case e => e }
-    assert(nodes <= 200, s"$nodes expression nodes in:\n$plan")
+    assert(nodes <= 105, s"$nodes expression nodes in:\n$plan")
+    assert(plan.collect { case p => p }.size <= 6, s"operators in:\n$plan")
+  }
+
+  test("q50 computes no responder links and no start time it does not select") {
+    // q50 reads callsign and remarks of `properties`: the links and the
+    // time parse must be pruned, not computed per row and dropped
+    val df = SparkEntry.queries("q50_active911_features")(spark, "")
+    val rows = df.collect()
+    assert(rows.length == 5 && rows.map(_.getString(2)).contains("Structure Fire"))
+    object Plans extends AdaptiveSparkPlanHelper
+    val udfInputs = Plans.collect(df.queryExecution.executedPlan) { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u.references.map(_.name).toSeq }))
+    assert(udfInputs.nonEmpty && udfInputs.forall(in => !in.contains("responses") && !in.contains("sent")),
+      s"row functions over: ${udfInputs.mkString("; ")}")
   }
 
   test("row functions carry no encoders (no per-task encoder projections)") {

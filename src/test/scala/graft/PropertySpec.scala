@@ -37,8 +37,8 @@ class PropertySpec extends SparkSpec {
     }.toDF("case_id", "blob", "expect_n", "c0", "c1", "c2")
     val schema = "a string, b string, c string"
     val got = df.select(col("case_id"), col("expect_n"), col("c0"), col("c1"), col("c2"),
-        size(Active911.csvRecords(col("blob"))).cast("long").as("got_n"),
-        from_csv(element_at(Active911.csvRecords(col("blob")), 1),
+        size(Active911Catalyst.csvRecords(col("blob"))).cast("long").as("got_n"),
+        from_csv(element_at(Active911Catalyst.csvRecords(col("blob")), 1),
           org.apache.spark.sql.types.StructType.fromDDL(schema),
           Map("quote" -> "\"", "escape" -> "\"")).as("r1"))
       .collect()
@@ -51,6 +51,120 @@ class PropertySpec extends SparkSpec {
         && rec.getString(2) == r.getAs[String]("c2"),
         s"case ${r.getAs[Long]("case_id")}: first-record cells")
     }
+  }
+
+  // --- S3/S5/S6: the envelope decode equals its four-step Catalyst model ---
+
+  /** A CSV cell as the export writes it: quoted when it holds a comma, a
+    * quote or a line break, or now and then left raw to break the framing.
+    */
+  private val cellGen: Gen[String] = {
+    val plain = Gen.choose(0, 6).flatMap(n => Gen.listOfN(n, Gen.alphaNumChar)).map(_.mkString)
+    val special = Gen.choose(1, 8).flatMap(n => Gen.listOfN(n, Gen.frequency(
+      5 -> Gen.alphaNumChar.map(_.toString), 1 -> Gen.const(","), 1 -> Gen.const("\""),
+      1 -> Gen.const("\n"), 1 -> Gen.const("\r\n"), 1 -> Gen.const(" "),
+      1 -> Gen.oneOf("é", "中", "\ud83d\ude92", "\u2028")))).map(_.mkString)
+    def quoted(c: String) =
+      if (c.exists(",\"\r\n".contains(_))) "\"" + c.replace("\"", "\"\"") + "\"" else c
+    Gen.frequency(60 -> plain, 30 -> special.map(quoted), 10 -> Gen.oneOf("", "   "),
+      1 -> special)
+  }
+
+  /** One generated envelope: every shape the decode distinguishes. */
+  private val envelopeGen: Gen[String] = {
+    val nCols = Active911.AlertColumns.size
+    val row = Gen.frequency(6 -> Gen.const(nCols), 1 -> Gen.choose(1, nCols - 1),
+      1 -> Gen.choose(nCols + 1, nCols + 6)).flatMap(n => Gen.listOfN(n, cellGen))
+    val record = Gen.frequency(8 -> row.map(_.mkString(",")), 1 -> Gen.const(""),
+      1 -> Gen.oneOf(" ", "   "))
+    val blob = for {
+      lead <- Gen.frequency(8 -> Gen.const(Nil), 1 -> Gen.const(List("")), 1 -> Gen.const(List("  ")))
+      rows <- Gen.frequency(1 -> Gen.const(Nil), 6 -> Gen.choose(1, 8).flatMap(Gen.listOfN(_, record)))
+      seps <- Gen.listOfN(lead.size + rows.size, Gen.frequency(3 -> "\n", 1 -> "\r\n"))
+      tail <- Gen.oneOf("", "", "\n", "\r\n", "\n\n")
+    } yield {
+      val lines = lead ++ (Active911.AlertColumns.mkString(",") :: rows)
+      lines.head + seps.zip(lines.tail).map { case (sep, r) => sep + r }.mkString + tail
+    }
+    val b64 = for {
+      text <- blob
+      mime <- Gen.frequency(4 -> false, 1 -> true)
+    } yield {
+      val bytes = text.getBytes("UTF-8")
+      if (mime) java.util.Base64.getMimeEncoder.encodeToString(bytes)
+      else java.util.Base64.getEncoder.encodeToString(bytes)
+    }
+    val body = b64.flatMap(m => Gen.frequency(
+      10 -> s"""{"result":"success","message":"$m"}""",
+      1 -> s"""{"message":"$m"}""",
+      1 -> s"""{"result":"error","message":"$m"}""",
+      1 -> """{"result":"error","message":"Agency not available"}""",
+      1 -> """{"result":"success","message":null}""",
+      1 -> """{"result":"success"}""",
+      1 -> s"""{"result":"success","message":"$m"""",
+      1 -> "not json at all"))
+    val wrapped = for {
+      b <- body
+      cb <- Gen.choose(1000L, 9999999L)
+      w <- Gen.frequency(
+        6 -> s"jQuery$cb($b)", 1 -> s"jQuery$cb($b)\n", 1 -> s"  jQuery$cb($b)  ",
+        1 -> s"/**/ typeof cb === 'function' && cb($b);", 1 -> s"junk\ncb($b)",
+        1 -> s"cb($b)\r\n", 1 -> b)
+    } yield w
+    Gen.frequency(20 -> wrapped, 1 -> Gen.const(null))
+  }
+
+  test("alertsFromEnvelopes: the row function decodes like the four Catalyst steps") {
+    val cases = sample(envelopeGen, 400, 83L).zipWithIndex.map { case (raw, i) =>
+      (i.toLong, i % 7, if (i % 5 == 0) null else s"tag-$i-é", raw)
+    }
+    // local[4]: the envelopes run as 4 concurrent tasks, so parser state
+    // shared across threads would show as wrong or missing rows
+    val env = cases.toDF("case_id", "agency_id", "tag", "raw")
+    assert(env.rdd.getNumPartitions == 4)
+    val got = Active911.alertsFromEnvelopes(env)
+    val want = Active911Catalyst.alertsFromEnvelopes(env)
+    assert(got.schema == want.schema)
+    val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+    assert(g.diff(w).isEmpty && w.diff(g).isEmpty,
+      s"rows only in the row function: ${g.diff(w).take(3)}; only in the model: ${w.diff(g).take(3)}")
+    // not vacuous: many rows, some envelopes yield none, short rows pad
+    // with nulls, and quoted line breaks and non-ASCII text survive
+    val cols = 3 until 3 + Active911.AlertColumns.size
+    assert(w.size > 400)
+    assert(w.map(_.getLong(0)).distinct.size < cases.size * 3 / 4)
+    assert(w.exists(r => r.isNullAt(cols.last)) && w.exists(r => !r.isNullAt(cols.last)))
+    assert(w.exists(r => cols.exists(i => Option(r.getString(i)).exists(_.contains("\n")))))
+    assert(w.exists(r => cols.exists(i => Option(r.getString(i)).exists(_.contains("中")))))
+    assert(w.exists(_.isNullAt(2)) && w.exists(!_.isNullAt(2)))
+  }
+
+  test("alertsFromEnvelopes: truncated base64 and malformed UTF-8 fail like the Catalyst steps") {
+    val header = Active911.AlertColumns.mkString(",")
+    def b64(bytes: Array[Byte]) = java.util.Base64.getEncoder.withoutPadding.encodeToString(bytes)
+    def envelope(message: String) =
+      Seq((1, s"""cb({"result":"success","message":"$message"})""")).toDF("agency_id", "raw")
+    def causes(t: Throwable): Seq[Throwable] = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    def failure(run: => Any): Seq[Throwable] = causes(intercept[Exception](run))
+    // a last base64 unit of one character holds too few bits
+    val full = b64((header + "\n1,2,3").getBytes("UTF-8"))
+    val truncated = envelope(full.take(4 * (full.length / 4 - 1) + 1))
+    Seq(Active911.alertsFromEnvelopes(truncated), Active911Catalyst.alertsFromEnvelopes(truncated))
+      .foreach(df => assert(failure(df.collect()).exists(_.isInstanceOf[IllegalArgumentException])))
+    // 0xC3 0x28 is not UTF-8: Spark 4's decode raises rather than
+    // substituting U+FFFD, and so must the row function
+    val malformed = envelope(b64(header.getBytes("UTF-8") ++ Array[Byte]('\n', '1', ',', 0xC3.toByte, 0x28)))
+    Seq(Active911.alertsFromEnvelopes(malformed), Active911Catalyst.alertsFromEnvelopes(malformed))
+      .foreach(df => assert(failure(df.collect()).exists(t =>
+        Option(t.getMessage).exists(_.contains("MALFORMED_CHARACTER_CODING")))))
+    // under the legacy coding-error action both substitute, alike
+    val key = org.apache.spark.sql.internal.SQLConf.LEGACY_CODING_ERROR_ACTION.key
+    spark.conf.set(key, "true")
+    try {
+      val got = Active911.alertsFromEnvelopes(malformed).collect().toSeq
+      assert(got == Active911Catalyst.alertsFromEnvelopes(malformed).collect().toSeq)
+      assert(got.map(_.getString(2)) == Seq("\ufffd("))
+    } finally spark.conf.unset(key)
   }
 
   // --- P1: jsNumber, the row function equals its Catalyst model ----------
